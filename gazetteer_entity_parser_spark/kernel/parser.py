@@ -38,8 +38,6 @@ class PossibleMatch:
 
     __slots__ = (
         "entity",
-        "char_start",
-        "char_end",
         "tok_start",
         "tok_end",
         "raw_value_length",
@@ -54,8 +52,6 @@ class PossibleMatch:
     def __init__(
         self,
         entity: int,
-        char_start: int,
-        char_end: int,
         tok_start: int,
         tok_end: int,
         raw_value_length: int,
@@ -64,11 +60,9 @@ class PossibleMatch:
         first_token_in_resolution: int,
         last_token_in_resolution: int,
         rank: int,
-        alternatives: list[tuple[int, int]] | None = None,
+        alternatives: list[int] | None = None,
     ) -> None:
         self.entity = entity
-        self.char_start = char_start
-        self.char_end = char_end
         self.tok_start = tok_start
         self.tok_end = tok_end
         self.raw_value_length = raw_value_length
@@ -97,8 +91,6 @@ class PossibleMatch:
     def copy(self) -> "PossibleMatch":
         return PossibleMatch(
             self.entity,
-            self.char_start,
-            self.char_end,
             self.tok_start,
             self.tok_end,
             self.raw_value_length,
@@ -148,16 +140,22 @@ class Parser:
         self._single_token_checked = False
         self._le2_tables = None
         self._le2_checked = False
-        self._rv_memo: dict[int, ResolvedValue] = {}
+        self._entry_memo: dict[int, tuple[int, int, ResolvedValue]] = {}
 
-    def _resolved_value(self, entity_id: int) -> ResolvedValue:
-        """Memoized entity materialization (strings per id never change;
-        injection returns a NEW Parser so the memo cannot go stale)."""
-        rv = self._rv_memo.get(entity_id)
-        if rv is None:
-            rv = ResolvedValue(*self.registry.get_resolved_value(entity_id))
-            self._rv_memo[entity_id] = rv
-        return rv
+    def _entry(self, entity_id: int) -> tuple[int, int, ResolvedValue]:
+        """Memoized ``(entity, rank, ResolvedValue)`` match entry (injection
+        returns a NEW Parser and in-place prepends clear the memo, so it
+        cannot go stale)."""
+        entry = self._entry_memo.get(entity_id)
+        if entry is None:
+            reg = self.registry
+            entry = (
+                entity_id,
+                reg.entity_rank[entity_id],
+                ResolvedValue(*reg.get_resolved_value(entity_id)),
+            )
+            self._entry_memo[entity_id] = entry
+        return entry
 
     def _invalidate_run_caches(self) -> None:
         """Drop lazily-built run-path caches after any in-place mutation of
@@ -169,7 +167,7 @@ class Parser:
         self._single_token_checked = False
         self._le2_tables = None
         self._le2_checked = False
-        self._rv_memo.clear()
+        self._entry_memo.clear()
 
     def set_threshold(self, threshold: float) -> None:
         """reference: src/parser.rs:119-121 (stored as f32)."""
@@ -208,6 +206,30 @@ class Parser:
 
     # ------------------------------------------------------------------- run
 
+    def match(
+        self, tokens: list[tuple[int, int, str]], max_alternatives: int = 0
+    ) -> list[tuple[int, int, tuple]]:
+        """The one match core: ``[(tok_start, tok_end, entries)]`` in token
+        order, where ``entries[0]`` is the winning ``(entity, rank,
+        ResolvedValue)`` and ``entries[1 : max_alternatives + 1]`` are its
+        alternatives in rank order (a fast-path plan hands out its whole
+        posting tuple, so consumers slice). Spans are token ordinals into
+        ``tokens``; every plan emits this form and ``run``/``run_light``/
+        ``run_light_pos`` are projections of it."""
+        table = self._single_token_lookup()
+        if table is not None:
+            get = table.get
+            return [
+                (i, i + 1, entries)
+                for i, tok in enumerate(tokens)
+                if (entries := get(tok[2])) is not None
+            ]
+        tables = self._le2_lookup()
+        if tables is not None:
+            return self._match_le2(tokens, tables)
+        heap = self._find_possible_matches(tokens, self.threshold, max_alternatives)
+        return self._parse_input(tokens, heap)
+
     def run(
         self,
         input_text: str,
@@ -220,139 +242,59 @@ class Parser:
         scan, the reduction re-walk, and the overlap loop."""
         if tokens is None:
             tokens = tokenize(input_text)
-        table = self._single_token_lookup()
-        if table is not None:
-            return self._run_single_token(input_text, max_alternatives, table, tokens)
-        tables = self._le2_lookup()
-        if tables is not None:
-            return self._run_le2(input_text, max_alternatives, tables, tokens)
-        heap = self._find_possible_matches(tokens, self.threshold, max_alternatives)
-        return self._parse_input(input_text, tokens, heap)
+        return self._parsed_values(
+            input_text, tokens, self.match(tokens, max_alternatives), max_alternatives
+        )
 
     def run_light(
         self, input_text: str, tokens: list[tuple[int, int, str]] | None = None
     ) -> list[tuple[str, int]]:
-        """Projection of :meth:`run` for aggregation-only consumers (the
-        fused triples stage): the (resolved, rank) sequence in token order,
-        without materializing ParsedValue/ResolvedValue objects or slicing
-        matched_value strings. Output equals
+        """The (resolved, rank) sequence in token order, for aggregation-only
+        consumers (the fused triples stage). Output equals
         ``[(pv.resolved_value.resolved, pv.rank) for pv in run(text, 0)]``
         (pinned in tests/test_fast_path.py)."""
         if tokens is None:
             tokens = tokenize(input_text)
-        st_table = self._single_token_lookup()
-        if st_table is not None:
-            get = st_table.get
-            out = []
-            for _s, _e, token in tokens:
-                postings = get(token)
-                if postings is not None:
-                    best = postings[0]
-                    out.append((best[2].resolved, best[1]))
-            return out
-        tables = self._le2_lookup()
-        if tables is not None:
-            singles, bigrams = tables
-            n = len(tokens)
-            pairs = []
-            bget = bigrams.get
-            prev_tt_cand = -2
-            for i in range(n - 1):
-                key = (tokens[i][2], tokens[i + 1][2])
-                entries = bget(key)
-                if entries is None:
-                    continue
-                if key[0] == key[1]:
-                    if prev_tt_cand == i - 1:
-                        continue
-                    prev_tt_cand = i
-                pairs.append((entries[0][0], i, entries[0]))
-            taken = bytearray(n)
-            out_pos: list[tuple[int, str, int]] = []
-            if pairs:
-                pairs.sort(key=lambda c: (c[0], c[1]))
-                for rank0, i, best in pairs:
-                    if taken[i] or taken[i + 1]:
-                        continue
-                    taken[i] = taken[i + 1] = 1
-                    out_pos.append((i, best[2].resolved, rank0))
-            sget = singles.get
-            for i in range(n):
-                if taken[i]:
-                    continue
-                entries = sget(tokens[i][2])
-                if entries is not None:
-                    best = entries[0]
-                    out_pos.append((i, best[2].resolved, best[0]))
-            out_pos.sort()
-            return [(res, rank) for _i, res, rank in out_pos]
-        return [
-            (pv.resolved_value.resolved, pv.rank) for pv in self.run(input_text, 0, tokens)
-        ]
+        return [(e[0][2].resolved, e[0][1]) for _s, _e, e in self.match(tokens)]
 
     def run_light_pos(
         self, input_text: str, tokens: list[tuple[int, int, str]] | None = None
     ) -> list[tuple[int, str, int]]:
-        """(start_token_ordinal, resolved, rank) triples in token order —
-        :meth:`run_light` plus each match's starting token index (r6: the
-        pruned-column extraction fast lane, which needs tok_idx but neither
-        char offsets nor matched_value). Output equals
-        ``[(pv.tok_range[0], pv.resolved_value.resolved, pv.rank) for pv in
-        run(text, 0)]`` (pinned in tests/test_fast_path.py). The body
-        mirrors run_light rather than wrapping it: run_light is the fused
-        triples hot path and must not pay a per-match re-projection."""
+        """(start_token_ordinal, resolved, rank) triples in token order.
+        Output equals ``[(pv.tok_range[0], pv.resolved_value.resolved,
+        pv.rank) for pv in run(text, 0)]`` (pinned in tests/test_fast_path.py)."""
         if tokens is None:
             tokens = tokenize(input_text)
-        st_table = self._single_token_lookup()
-        if st_table is not None:
-            get = st_table.get
-            out = []
-            for i, (_s, _e, token) in enumerate(tokens):
-                postings = get(token)
-                if postings is not None:
-                    best = postings[0]
-                    out.append((i, best[2].resolved, best[1]))
-            return out
-        tables = self._le2_lookup()
-        if tables is not None:
-            singles, bigrams = tables
-            n = len(tokens)
-            pairs = []
-            bget = bigrams.get
-            prev_tt_cand = -2
-            for i in range(n - 1):
-                key = (tokens[i][2], tokens[i + 1][2])
-                entries = bget(key)
-                if entries is None:
-                    continue
-                if key[0] == key[1]:
-                    if prev_tt_cand == i - 1:
-                        continue
-                    prev_tt_cand = i
-                pairs.append((entries[0][0], i, entries[0]))
-            taken = bytearray(n)
-            out_pos: list[tuple[int, str, int]] = []
-            if pairs:
-                pairs.sort(key=lambda c: (c[0], c[1]))
-                for rank0, i, best in pairs:
-                    if taken[i] or taken[i + 1]:
-                        continue
-                    taken[i] = taken[i + 1] = 1
-                    out_pos.append((i, best[2].resolved, rank0))
-            sget = singles.get
-            for i in range(n):
-                if taken[i]:
-                    continue
-                entries = sget(tokens[i][2])
-                if entries is not None:
-                    best = entries[0]
-                    out_pos.append((i, best[2].resolved, best[0]))
-            out_pos.sort()
-            return out_pos
-        return [
-            (pv.tok_range[0], pv.resolved_value.resolved, pv.rank)
-            for pv in self.run(input_text, 0, tokens)
-        ]
+        return [(s, e[0][2].resolved, e[0][1]) for s, _e, e in self.match(tokens)]
+
+    @staticmethod
+    def _parsed_values(
+        input_text: str, tokens, matches, max_alternatives: int
+    ) -> list[ParsedValue]:
+        """ParsedValues from :meth:`match` output. Tokens are raw substrings
+        of ``input_text``, so a span's char range and matched_value follow
+        from its first and last token."""
+        out = []
+        for ts, te, entries in matches:
+            start = tokens[ts][0]
+            end = tokens[te - 1][1]
+            ev, rank, rv = entries[0]
+            out.append(
+                ParsedValue(
+                    resolved_value=rv,
+                    range=(start, end),
+                    matched_value=input_text[start:end],
+                    alternatives=(
+                        tuple(e[2] for e in entries[1 : max_alternatives + 1])
+                        if max_alternatives
+                        else ()
+                    ),
+                    entity=ev,
+                    rank=rank,
+                    tok_range=(ts, te),
+                )
+            )
+        return out
 
     # -------------------------------------------- pure-dictionary fast path
 
@@ -373,46 +315,18 @@ class Parser:
                 and self.threshold <= 1.0
                 and all(len(t) == 1 for t in reg.entity_tokens)
             ):
-                # per token: postings fully materialized in rank order; a
-                # single-token entity's raw_value IS its token string
-                table: dict[str, list] = {}
+                # per token: the match entries of its postings in rank order;
+                # a single-token entity's raw_value IS its token string
+                table: dict[str, tuple] = {}
                 for token, tid in reg.token_ids.items():
                     postings = sorted(reg.postings[tid], key=lambda ev: reg.entity_rank[ev])
                     if postings:
-                        table[token] = [
+                        table[token] = tuple(
                             (ev, reg.entity_rank[ev], ResolvedValue(reg.resolved[ev], token))
                             for ev in postings
-                        ]
+                        )
                 self._single_token_table = table
         return self._single_token_table
-
-    def _run_single_token(
-        self, input_text: str, max_alternatives: int, table, tokens
-    ) -> list[ParsedValue]:
-        out = []
-        get = table.get
-        for tok_idx, (start, end, token) in enumerate(tokens):
-            postings = get(token)
-            if postings is None:
-                continue
-            ev, rank, rv = postings[0]
-            alts = (
-                tuple(p[2] for p in postings[1 : max_alternatives + 1])
-                if max_alternatives and len(postings) > 1
-                else ()
-            )
-            out.append(
-                ParsedValue(
-                    resolved_value=rv,
-                    range=(start, end),
-                    matched_value=token,
-                    alternatives=alts,
-                    entity=ev,
-                    rank=rank,
-                    tok_range=(tok_idx, tok_idx + 1),
-                )
-            )
-        return out
 
     # ----------------------------------------- 1-2-token-entry fast path
 
@@ -464,24 +378,20 @@ class Parser:
                 bigrams: dict[tuple[str, str], list] = {}
                 for ev, tok_ids in enumerate(reg.entity_tokens):
                     strs = tuple(id_to_token[t] for t in tok_ids)
-                    entry = (ranks[ev], ev, ResolvedValue(reg.resolved[ev], " ".join(strs)))
+                    entry = (ev, ranks[ev], ResolvedValue(reg.resolved[ev], " ".join(strs)))
                     if len(strs) == 1:
                         singles.setdefault(strs[0], []).append(entry)
                     else:
                         bigrams.setdefault(strs, []).append(entry)
-                for lst in singles.values():
-                    lst.sort(key=lambda e: e[0])
-                for lst in bigrams.values():
-                    lst.sort(key=lambda e: e[0])
+                singles = {k: tuple(sorted(v, key=lambda e: e[1])) for k, v in singles.items()}
+                bigrams = {k: tuple(sorted(v, key=lambda e: e[1])) for k, v in bigrams.items()}
                 self._le2_tables = (singles, bigrams)
         return self._le2_tables
 
-    def _run_le2(
-        self, input_text: str, max_alternatives: int, tables, tokens
-    ) -> list[ParsedValue]:
+    @staticmethod
+    def _match_le2(tokens, tables) -> list[tuple[int, int, tuple]]:
         singles, bigrams = tables
         n = len(tokens)
-        out: list[ParsedValue] = []
 
         # enumerate bigram candidates in scan order; (t, t) keys alternate
         # within equal-token runs (see _le2_lookup). A single tracker is
@@ -498,60 +408,25 @@ class Parser:
                 if prev_tt_cand == i - 1:
                     continue
                 prev_tt_cand = i
-            cands.append((entries[0][0], i, entries))
+            cands.append((entries[0][1], i, entries))
 
         taken = bytearray(n)
+        out = []
         if cands:
-            cands.sort(key=lambda c: (c[0], c[1]))
-            for rank0, i, entries in cands:
+            # (rank, position) is unique per candidate: entries never compare
+            cands.sort()
+            for _rank, i, entries in cands:
                 if taken[i] or taken[i + 1]:
                     continue
                 taken[i] = taken[i + 1] = 1
-                _r, ev0, rv0 = entries[0]
-                alts = (
-                    tuple(e[2] for e in entries[1 : max_alternatives + 1])
-                    if max_alternatives and len(entries) > 1
-                    else ()
-                )
-                start = tokens[i][0]
-                end = tokens[i + 1][1]
-                out.append(
-                    ParsedValue(
-                        resolved_value=rv0,
-                        range=(start, end),
-                        matched_value=input_text[start:end],
-                        alternatives=alts,
-                        entity=ev0,
-                        rank=rank0,
-                        tok_range=(i, i + 2),
-                    )
-                )
+                out.append((i, i + 2, entries))
 
         sget = singles.get
-        for i, (start, end, token) in enumerate(tokens):
-            if taken[i]:
-                continue
-            entries = sget(token)
-            if entries is None:
-                continue
-            rank0, ev0, rv0 = entries[0]
-            alts = (
-                tuple(e[2] for e in entries[1 : max_alternatives + 1])
-                if max_alternatives and len(entries) > 1
-                else ()
-            )
-            out.append(
-                ParsedValue(
-                    resolved_value=rv0,
-                    range=(start, end),
-                    matched_value=token,
-                    alternatives=alts,
-                    entity=ev0,
-                    rank=rank0,
-                    tok_range=(i, i + 1),
-                )
-            )
-        out.sort(key=lambda p: p.range)
+        for i, tok in enumerate(tokens):
+            if not taken[i] and (entries := sget(tok[2])) is not None:
+                out.append((i, i + 1, entries))
+        if cands:
+            out.sort()
         return out
 
     # ---------------------------------------------------------- candidate scan
@@ -569,10 +444,10 @@ class Parser:
         edge_cases = reg.edge_cases
         partial: dict[int, PossibleMatch] = {}
         finals: list[PossibleMatch] = []
-        skipped: dict[int, tuple[int, int, int]] = {}  # tok_idx -> (start, end, token_id)
+        skipped: dict[int, int] = {}  # tok_idx -> token_id
 
-        for token_idx, (start, end, token) in enumerate(tokens):
-            value = token_ids.get(token)
+        for token_idx, tok in enumerate(tokens):
+            value = token_ids.get(tok[2])
             if value is None:
                 continue
             res_vals = postings[value]
@@ -583,18 +458,16 @@ class Parser:
             if value not in stop_words:
                 for res_val in res_vals:
                     self._update_or_insert(
-                        value, res_val, token_idx, start, end,
-                        partial, finals, skipped, threshold,
+                        value, res_val, token_idx, partial, finals, skipped, threshold
                     )
             else:
-                skipped[token_idx] = (start, end, value)
+                skipped[token_idx] = value
                 # edge cases containing this stop word: grow/start at θ=1.0
                 # (reference: src/parser.rs:252-269)
                 if edge_cases:
                     for res_val in edge_cases.intersection(res_vals):
                         self._update_or_insert(
-                            value, res_val, token_idx, start, end,
-                            partial, finals, skipped, 1.0,
+                            value, res_val, token_idx, partial, finals, skipped, 1.0
                         )
                 # grow (never initiate) existing non-edge-case matches that
                 # contain the stop word (reference: src/parser.rs:271-287)
@@ -602,7 +475,7 @@ class Parser:
                 for res_val, pm in partial.items():
                     if res_val not in res_set or res_val in edge_cases:
                         continue
-                    self._update_previous(pm, token_idx, value, start, end, threshold, finals)
+                    self._update_previous(pm, token_idx, value, threshold, finals)
 
         # flush surviving partials through the threshold filter; no copy
         # needed — the partial map is discarded here
@@ -616,20 +489,20 @@ class Parser:
     # -------------------------------------------------------- upsert dispatch
 
     def _update_or_insert(
-        self, value, res_val, token_idx, start, end, partial, finals, skipped, threshold
+        self, value, res_val, token_idx, partial, finals, skipped, threshold
     ) -> None:
         """reference: src/parser.rs:311-347."""
         pm = partial.get(res_val)
         if pm is not None:
-            self._update_previous(pm, token_idx, value, start, end, threshold, finals)
+            self._update_previous(pm, token_idx, value, threshold, finals)
         else:
-            new_pm = self._insert_new(res_val, value, start, end, token_idx, threshold, skipped)
+            new_pm = self._insert_new(res_val, value, token_idx, threshold, skipped)
             if new_pm is not None:
                 partial[res_val] = new_pm
 
     # ------------------------------------------------------------ match growth
 
-    def _update_previous(self, pm, token_idx, value, start, end, threshold, finals) -> None:
+    def _update_previous(self, pm, token_idx, value, threshold, finals) -> None:
         """Grow iff input-adjacent AND the token occurs in the entry after the
         last consumed entry position; otherwise flush (if ≥θ) and restart at
         this token's first entry position (reference: src/parser.rs:349-405)."""
@@ -641,7 +514,6 @@ class Parser:
             except ValueError:
                 otoken_idx = -1
             if otoken_idx >= 0:
-                pm.char_end = end
                 pm.n_consumed_tokens += 1
                 pm.last_token_in_input = token_idx
                 pm.last_token_in_resolution = otoken_idx
@@ -653,8 +525,6 @@ class Parser:
 
         # restart in place with the same entity (reference: src/parser.rs:388-404)
         pos = otokens.index(value)  # panics in the reference if absent; same here
-        pm.char_start = start
-        pm.char_end = end
         pm.tok_start = token_idx
         pm.tok_end = token_idx + 1
         pm.raw_value_length = len(otokens)
@@ -668,7 +538,7 @@ class Parser:
     # ---------------------------------------------------- match start/backtrack
 
     def _insert_new(
-        self, res_val, value, start, end, token_idx, threshold, skipped
+        self, res_val, value, token_idx, threshold, skipped
     ) -> PossibleMatch | None:
         """Seed a 1-token match at the token's first entry position, absorb
         contiguous previously-skipped stop words backwards (decrementing the
@@ -680,8 +550,6 @@ class Parser:
         pos = otokens.index(value)
         pm = PossibleMatch(
             entity=res_val,
-            char_start=start,
-            char_end=end,
             tok_start=token_idx,
             tok_end=token_idx + 1,
             raw_value_length=len(otokens),
@@ -693,16 +561,14 @@ class Parser:
         )
         n_skips = pos
         for btok_idx in range(token_idx - 1, -1, -1):
-            hit = skipped.get(btok_idx)
-            if hit is None:
+            skip_tok = skipped.get(btok_idx)
+            if skip_tok is None:
                 break
-            skip_start, _skip_end, skip_tok = hit
             try:
                 idx = otokens.index(skip_tok)
             except ValueError:
                 break
             if idx < pm.first_token_in_resolution:
-                pm.char_start = skip_start
                 pm.tok_start = btok_idx
                 pm.n_consumed_tokens += 1
                 pm.first_token_in_resolution -= 1
@@ -717,15 +583,16 @@ class Parser:
     # -------------------------------------------------- greedy overlap resolve
 
     def _parse_input(
-        self, input_text: str, toks: list[tuple[int, int, str]], heap: list
-    ) -> list[ParsedValue]:
+        self, toks: list[tuple[int, int, str]], heap: list
+    ) -> list[tuple[int, int, tuple]]:
         """Pop best-first; overlapping candidates are reduced and re-pushed if
         still above threshold; emitted spans claim their token positions
-        (reference: src/parser.rs:506-572)."""
+        (reference: src/parser.rs:506-572). Returns :meth:`match` positions."""
         reg = self.registry
+        entry = self._entry
         n_total_tokens = len(toks)
         taken: set[int] = set()
-        out: list[ParsedValue] = []
+        out = []
         seq = len(heap)  # fresh sequence numbers for re-pushed entries
 
         while heap and len(taken) < n_total_tokens:
@@ -735,7 +602,7 @@ class Parser:
             # range beats scanning the taken set per pop
             overlapping = taken.intersection(range(pm.tok_start, pm.tok_end))
             if overlapping:
-                reduced = _reduce_possible_match(toks, pm, overlapping)
+                reduced = _reduce_possible_match(pm, overlapping)
                 if reduced is not None:
                     thr = 1.0 if reg.is_edge_case(reduced.entity) else self.threshold
                     if reduced.check(thr):
@@ -743,23 +610,12 @@ class Parser:
                         heapq.heappush(heap, (reduced.sort_key(), seq, reduced))
                 continue
 
-            alts = tuple(
-                self._resolved_value(alt_ev) for alt_ev, _alt_rank in pm.alternatives
-            )
-            out.append(
-                ParsedValue(
-                    resolved_value=self._resolved_value(pm.entity),
-                    range=(pm.char_start, pm.char_end),
-                    matched_value=input_text[pm.char_start : pm.char_end],
-                    alternatives=alts,
-                    entity=pm.entity,
-                    rank=reg.entity_rank[pm.entity],
-                    tok_range=(pm.tok_start, pm.tok_end),
-                )
-            )
+            entries = (entry(pm.entity), *(entry(ev) for ev in pm.alternatives))
+            out.append((pm.tok_start, pm.tok_end, entries))
             taken.update(range(pm.tok_start, pm.tok_end))
 
-        out.sort(key=lambda p: p.range)
+        # spans are disjoint, so tok_start alone orders them
+        out.sort()
         return out
 
 
@@ -767,13 +623,14 @@ class Parser:
 
 
 def _group_matches(finals: list[PossibleMatch], max_alternatives: int) -> list:
-    """Group finals by exact char range; per group keep the best match and
+    """Group finals by exact span (a token span is a char range: tokens are
+    disjoint and non-empty); per group keep the best match and
     attach up to ``max_alternatives`` alternatives in quality order, stopping
     at the first alternative with a larger raw_value_length
     (reference: src/parser.rs:585-623). Returns a ready heapq list."""
     groups: dict[tuple[int, int], list[PossibleMatch]] = {}
     for pm in finals:
-        groups.setdefault((pm.char_start, pm.char_end), []).append(pm)
+        groups.setdefault((pm.tok_start, pm.tok_end), []).append(pm)
 
     heap: list = []
     seq = 0
@@ -785,33 +642,25 @@ def _group_matches(finals: list[PossibleMatch], max_alternatives: int) -> list:
                 break
             if m.raw_value_length > best.raw_value_length:
                 break
-            best.alternatives.append((m.entity, m.rank))
+            best.alternatives.append(m.entity)
         heap.append((best.sort_key(), seq, best))
         seq += 1
     heapq.heapify(heap)
     return heap
 
 
-def _reduce_possible_match(
-    toks: list[tuple[int, int, str]], pm: PossibleMatch, overlapping: set[int]
-) -> PossibleMatch | None:
+def _reduce_possible_match(pm: PossibleMatch, overlapping: set[int]) -> PossibleMatch | None:
     """Drop overlapping token positions; the surviving span's width becomes
     the new n_consumed_tokens — interior never-matched tokens count as
     consumed after reduction, a reference quirk we reproduce
     (reference: src/parser.rs:472-504, :495)."""
-    surviving = [
-        (i, toks[i])
-        for i in range(pm.tok_start, min(pm.tok_end, len(toks)))
-        if i not in overlapping
-    ]
+    surviving = [i for i in range(pm.tok_start, pm.tok_end) if i not in overlapping]
     if not surviving:
         return None
-    first_idx, (first_start, _fe, _ft) = surviving[0]
-    last_idx, (_ls, last_end, _lt) = surviving[-1]
+    first_idx = surviving[0]
+    last_idx = surviving[-1]
     return PossibleMatch(
         entity=pm.entity,
-        char_start=first_start,
-        char_end=last_end,
         tok_start=first_idx,
         tok_end=last_idx + 1,
         raw_value_length=pm.raw_value_length,

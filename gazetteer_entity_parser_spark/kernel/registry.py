@@ -241,14 +241,8 @@ class Registry:
     def get_token_idx(self, token: str) -> int | None:
         return self.token_ids.get(token)
 
-    def get_resolved_values(self, token_idx: int) -> list[int]:
-        return self.postings[token_idx]
-
     def get_tokens(self, entity_id: int) -> tuple[int, tuple[int, ...]]:
         return self.entity_rank[entity_id], self.entity_tokens[entity_id]
-
-    def is_stop_word(self, token_idx: int) -> bool:
-        return token_idx in self.stop_words
 
     def is_edge_case(self, entity_id: int) -> bool:
         return entity_id in self.edge_cases
@@ -278,15 +272,6 @@ class Registry:
 
     def get_edge_cases(self) -> set[str]:
         return {self.resolved[ev] for ev in self.edge_cases}
-
-    # ------------------------------------------------------------- utilities
-
-    def raw_values_joined(self) -> list[str]:
-        """Per entity id, the space-joined raw value (used by pipelines)."""
-        id_to_token = self._id_to_token()
-        return [
-            " ".join(id_to_token[t] for t in toks) for toks in self.entity_tokens
-        ]
 
     def __eq__(self, other: object) -> bool:
         if not isinstance(other, Registry):

@@ -78,11 +78,16 @@ def split_sentences(text: str) -> list[tuple[int, str]]:
 def iter_windows(
     text: str, window_tokens: int | None
 ) -> Iterator[tuple[int, int, int, str, list[tuple[int, int, str]]]]:
-    """Yield (sent_idx, char_offset, base_tok_idx, window_text, window_tokens).
+    """The one window walker: yield (sent_idx, sent_off, base_tok, sentence,
+    chunk) per kernel call.
 
-    Sentences are regex-split; long sentences are further chunked every
-    ``window_tokens`` tokens (None = no chunking). Token ordinals are
-    doc-global.
+    Sentences are regex-split and tokenized once; long sentences are cut
+    every ``window_tokens`` tokens (None = no chunking). A chunk is a token
+    slice with sentence-relative spans, handed to the kernel together with
+    the whole sentence (no per-chunk text copy or span rebasing): spans slice
+    ``sentence``, ``sent_off + span`` is doc-global, and ``base_tok + i`` is
+    the doc-global ordinal of ``chunk[i]``. ``sent_idx`` and ``base_tok``
+    advance per non-empty chunk.
     """
     sent_idx = 0
     base_tok = 0
@@ -91,19 +96,13 @@ def iter_windows(
         if not toks:
             continue
         if window_tokens is None or len(toks) <= window_tokens:
-            yield sent_idx, sent_off, base_tok, sent, toks
-            sent_idx += 1
-            base_tok += len(toks)
+            chunks = (toks,)
         else:
-            for i in range(0, len(toks), window_tokens):
-                chunk = toks[i : i + window_tokens]
-                c_start = chunk[0][0]
-                c_end = chunk[-1][1]
-                # re-based token spans within the chunk string
-                rebased = [(s - c_start, e - c_start, t) for s, e, t in chunk]
-                yield sent_idx, sent_off + c_start, base_tok, sent[c_start:c_end], rebased
-                sent_idx += 1
-                base_tok += len(chunk)
+            chunks = (toks[i : i + window_tokens] for i in range(0, len(toks), window_tokens))
+        for chunk in chunks:
+            yield sent_idx, sent_off, base_tok, sent, chunk
+            sent_idx += 1
+            base_tok += len(chunk)
 
 
 # begin/end/tok_idx are int32 BY CONSTRUCTION, not by hope: a Spark/Arrow
@@ -130,8 +129,8 @@ def extract_mentions(
     ``columns`` projects the OUTPUT inside the UDF: Catalyst cannot push
     column pruning through a mapInPandas boundary, so a narrow consumer (the
     triples path needs only url/sent_idx/tok_idx/resolved/rank) would
-    otherwise pay Python string slicing, alternatives materialization, and
-    Arrow transfer for columns it immediately drops. Equality with
+    otherwise pay Arrow transfer and downstream bytes for columns it
+    immediately drops. The kernel work is the same either way. Equality with
     full-output + .select() is pinned in tests/test_extract_spark.py.
     """
     pruned = docs.select(F.col(key_col).alias("url"), F.col(text_col).alias("text"))
@@ -145,8 +144,7 @@ def extract_mentions(
         schema = MENTIONS_SCHEMA
     else:
         if not columns:
-            # fail at the driver: an empty projection would otherwise surface
-            # as an IndexError inside the executor UDF on the first batch
+            # fail at the driver rather than inside the executor UDF
             raise ValueError(
                 "columns must be None or a non-empty subset of MENTIONS_SCHEMA "
                 f"fields {all_fields}"
@@ -158,162 +156,43 @@ def extract_mentions(
         schema = T.StructType([MENTIONS_SCHEMA[c] for c in cols])
 
     def run_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        parser: Parser = parser_broadcast.value
-        run = parser.run
-        # r6: single-token direct-append loop — when every gazetteer entry is
-        # one token and no alternatives are requested, a mention is a pure
-        # dictionary hit and all 11 output fields are computable without
-        # building ParsedValue/ResolvedValue objects per mention (the vocab
-        # mentions query emits 2.7M mentions at sf1.0; the object layer was
-        # ~30% of the stage). Field-for-field equality with _run_single_token
-        # is by construction (same table, same first-posting pick) and the
-        # whole path stays pinned by the oracle + pytest goldens.
-        st_table = parser._single_token_lookup() if max_alternatives == 0 else None
-        full = columns is None
-        # r6: light-projection fast lane — when the requested columns need
-        # neither char offsets nor matched_value/alternatives (the triples/
-        # checkpoint consumers ask exactly for url/sent_idx/tok_idx/resolved/
-        # rank), run_light_pos supplies (tok_ordinal, resolved, rank) with no
-        # ParsedValue/ResolvedValue construction and no string slicing at
-        # all; equality with the full path is pinned in pytest.
-        light_pos = (
-            not full
-            and max_alternatives == 0
-            and set(columns) <= {"url", "sent_idx", "tok_idx", "resolved", "rank"}
-        )
-        run_pos = parser.run_light_pos if light_pos else None
-        if not full:
-            # per-mention value producers, evaluated only for the projection
-            # (the full path below stays a hand-inlined loop — the dispatch
-            # indirection measured an 11% tax there)
-            makers = {
-                "url": lambda ctx, pv: ctx[0],
-                "sent_idx": lambda ctx, pv: ctx[1],
-                "tok_idx": lambda ctx, pv: ctx[3] + pv.tok_range[0],
-                "begin": lambda ctx, pv: ctx[2] + pv.range[0],
-                "end": lambda ctx, pv: ctx[2] + pv.range[1],
-                "matched_value": lambda ctx, pv: pv.matched_value,
-                "resolved": lambda ctx, pv: pv.resolved_value.resolved,
-                "raw_value": lambda ctx, pv: pv.resolved_value.raw_value,
-                "entity_id": lambda ctx, pv: pv.entity,
-                "rank": lambda ctx, pv: pv.rank,
-                "alternatives": lambda ctx, pv: [
-                    {"resolved": a.resolved, "raw_value": a.raw_value}
-                    for a in pv.alternatives
-                ],
-            }
-        st_get = st_table.get if (st_table is not None and full) else None
+        match = parser_broadcast.value.match
+        k = max_alternatives
         for pdf in batches:
-            out = {c: [] for c in cols}
-            if not full:
-                appenders = [(out[c], makers[c]) for c in cols]
-            if run_pos is not None:
-                lp_url = out.get("url")
-                lp_sent = out.get("sent_idx")
-                lp_tok = out.get("tok_idx")
-                lp_res = out.get("resolved")
-                lp_rank = out.get("rank")
-            if st_get is not None:
-                o_url, o_sent, o_tok = out["url"], out["sent_idx"], out["tok_idx"]
-                o_beg, o_end, o_match = out["begin"], out["end"], out["matched_value"]
-                o_res, o_raw = out["resolved"], out["raw_value"]
-                o_ent, o_rank, o_alt = out["entity_id"], out["rank"], out["alternatives"]
+            # one list per MENTIONS_SCHEMA field, in schema order
+            out = [[] for _ in all_fields]
+            (o_url, o_sent, o_tok, o_beg, o_end, o_match,
+             o_res, o_raw, o_ent, o_rank, o_alt) = out
             for url, text in zip(pdf["url"].values, pdf["text"].values):
                 if not text:
                     continue
-                # r6: sentences are tokenized once and chunks are TOKEN
-                # slices only — the kernel receives the full sentence with
-                # sentence-relative spans (no per-chunk text copy, no span
-                # rebasing), exactly the fused-path convention: the kernel
-                # reads text solely to slice matched_value, for which
-                # sentence text + sentence-relative spans are identical to
-                # chunk text + rebased spans. Window accounting (sent_idx
-                # and base_tok advance per non-empty chunk) is unchanged
-                # from iter_windows.
-                sent_idx = 0
-                base_tok = 0
-                for sent_off, sent in split_sentences(text):
-                    toks = tokenize(sent)
-                    nt = len(toks)
-                    if not nt:
-                        continue
-                    if window_tokens is None or nt <= window_tokens:
-                        chunks = (toks,)
-                    else:
-                        chunks = (
-                            toks[i : i + window_tokens]
-                            for i in range(0, nt, window_tokens)
+                for sent_idx, sent_off, base_tok, sent, chunk in iter_windows(
+                    text, window_tokens
+                ):
+                    for ts, te, entries in match(chunk, k):
+                        start = chunk[ts][0]
+                        end = chunk[te - 1][1]
+                        ev, rank, rv = entries[0]
+                        o_url.append(url)
+                        o_sent.append(sent_idx)
+                        o_tok.append(base_tok + ts)
+                        o_beg.append(sent_off + start)
+                        o_end.append(sent_off + end)
+                        o_match.append(sent[start:end])
+                        o_res.append(rv.resolved)
+                        o_raw.append(rv.raw_value)
+                        o_ent.append(ev)
+                        o_rank.append(rank)
+                        o_alt.append(
+                            [
+                                {"resolved": a[2].resolved, "raw_value": a[2].raw_value}
+                                for a in entries[1 : k + 1]
+                            ]
+                            if k
+                            else ()
                         )
-                    for chunk in chunks:
-                        if run_pos is not None:
-                            for pos, res, rank in run_pos(sent, tokens=chunk):
-                                if lp_url is not None:
-                                    lp_url.append(url)
-                                if lp_sent is not None:
-                                    lp_sent.append(sent_idx)
-                                if lp_tok is not None:
-                                    lp_tok.append(base_tok + pos)
-                                if lp_res is not None:
-                                    lp_res.append(res)
-                                if lp_rank is not None:
-                                    lp_rank.append(rank)
-                        elif st_get is not None:
-                            for ti, (s, e, token) in enumerate(chunk):
-                                postings = st_get(token)
-                                if postings is None:
-                                    continue
-                                ev, rank, rv = postings[0]
-                                o_url.append(url)
-                                o_sent.append(sent_idx)
-                                o_tok.append(base_tok + ti)
-                                o_beg.append(sent_off + s)
-                                o_end.append(sent_off + e)
-                                o_match.append(token)
-                                o_res.append(rv.resolved)
-                                o_raw.append(rv.raw_value)
-                                o_ent.append(ev)
-                                o_rank.append(rank)
-                                o_alt.append(())
-                        else:
-                            parsed = run(sent, max_alternatives, tokens=chunk)
-                            if parsed:
-                                if full:
-                                    for pv in parsed:
-                                        begin, end = pv.range
-                                        out["url"].append(url)
-                                        out["sent_idx"].append(sent_idx)
-                                        out["tok_idx"].append(
-                                            base_tok + pv.tok_range[0]
-                                        )
-                                        out["begin"].append(sent_off + begin)
-                                        out["end"].append(sent_off + end)
-                                        out["matched_value"].append(pv.matched_value)
-                                        out["resolved"].append(
-                                            pv.resolved_value.resolved
-                                        )
-                                        out["raw_value"].append(
-                                            pv.resolved_value.raw_value
-                                        )
-                                        out["entity_id"].append(pv.entity)
-                                        out["rank"].append(pv.rank)
-                                        out["alternatives"].append(
-                                            [
-                                                {
-                                                    "resolved": a.resolved,
-                                                    "raw_value": a.raw_value,
-                                                }
-                                                for a in pv.alternatives
-                                            ]
-                                        )
-                                else:
-                                    ctx = (url, sent_idx, sent_off, base_tok)
-                                    for pv in parsed:
-                                        for lst, mk in appenders:
-                                            lst.append(mk(ctx, pv))
-                        sent_idx += 1
-                        base_tok += len(chunk)
-            if out[cols[0]]:  # empty frames would carry float64 columns into Arrow
-                yield pd.DataFrame(out, columns=cols)
+            if o_url:  # empty frames would carry float64 columns into Arrow
+                yield pd.DataFrame(dict(zip(all_fields, out)), columns=cols)
 
     return pruned.mapInPandas(run_batches, schema)
 
@@ -369,43 +248,23 @@ def extract_triple_partials(
             for text in pdf["text"].values:
                 if not text:
                     continue
-                # aggregation needs only (resolved, rank) per window, so this
-                # loop skips iter_windows' chunk-text slicing and offset
-                # rebasing: run_light never reads offsets, and the general-
-                # path fallback inside it is handed sentence-relative spans
-                # with the full sentence text, which is equally valid (char
-                # offsets only shape matched_value/ranges, both discarded
-                # here). Canonical equality with the unfused path is pinned
-                # in tests/test_triples_grouped.py.
-                for _off, sent in split_sentences(text):
-                    toks = tokenize(sent)
-                    n_toks = len(toks)
-                    if n_toks < 2:
+                for _si, _off, _bt, sent, chunk in iter_windows(text, window_tokens):
+                    ms = run_light(sent, tokens=chunk)
+                    if len(ms) < 2:
                         continue
-                    if window_tokens is None or n_toks <= window_tokens:
-                        chunks = (toks,)
-                    else:
-                        chunks = (
-                            toks[i : i + window_tokens]
-                            for i in range(0, n_toks, window_tokens)
-                        )
-                    for chunk in chunks:
-                        ms = run_light(sent, tokens=chunk)
-                        if len(ms) < 2:
-                            continue
-                        for i in range(len(ms) - 1):
-                            s_res, s_rank = ms[i]
-                            for j in range(i + 1, len(ms)):
-                                o_res, o_rank = ms[j]
-                                hit = acc.get((s_res, o_res))
-                                if hit is None:
-                                    acc[(s_res, o_res)] = [1, s_rank, o_rank]
-                                else:
-                                    hit[0] += 1
-                                    if s_rank < hit[1]:
-                                        hit[1] = s_rank
-                                    if o_rank < hit[2]:
-                                        hit[2] = o_rank
+                    for i in range(len(ms) - 1):
+                        s_res, s_rank = ms[i]
+                        for j in range(i + 1, len(ms)):
+                            o_res, o_rank = ms[j]
+                            hit = acc.get((s_res, o_res))
+                            if hit is None:
+                                acc[(s_res, o_res)] = [1, s_rank, o_rank]
+                            else:
+                                hit[0] += 1
+                                if s_rank < hit[1]:
+                                    hit[1] = s_rank
+                                if o_rank < hit[2]:
+                                    hit[2] = o_rank
             if acc:
                 yield pd.DataFrame(
                     {

@@ -1,4 +1,4 @@
-"""Gazetteer sources: literal, parquet, and corpus-derived.
+"""Gazetteer sources: literal and corpus-derived.
 
 The reference consumes an ordered ``Vec<EntityValue>``
 (reference: src/data.rs:93-131); our engine consumes a DataFrame
@@ -23,8 +23,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .webpages import read_documents
-
 
 def literal_gazetteer(spark: SparkSession, rows: list[tuple[str, str]]) -> DataFrame:
     """reference: src/macros.rs:2-13 (gazetteer! literal) — rank = position."""
@@ -32,10 +30,6 @@ def literal_gazetteer(spark: SparkSession, rows: list[tuple[str, str]]) -> DataF
         [(raw, res, i) for i, (raw, res) in enumerate(rows)],
         "raw_value string, resolved_value string, rank bigint",
     )
-
-
-def read_gazetteer_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
 
 
 def corpus_words(docs: DataFrame) -> DataFrame:
@@ -84,7 +78,3 @@ def alias_gazetteer(docs: DataFrame, n_entities: int = 40) -> DataFrame:
         )
     )
     return vocab.unionByName(bigrams)
-
-
-def load_vocabulary_gazetteer(spark: SparkSession, sf_dir: str, n_entities: int = 40) -> DataFrame:
-    return vocabulary_gazetteer(read_documents(spark, sf_dir), n_entities)

@@ -22,10 +22,6 @@ WEBPAGE_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang 
 _WARC_EPOCH = "2020-01-01 00:00:00"
 
 
-def read_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
 def webpages_from_documents(docs: DataFrame) -> DataFrame:
     """Deterministic documents -> web-pages derivation (also expressible as
     ANSI SQL for the DuckDB oracle — see __spark_entry__.oracle_sql)."""
@@ -41,10 +37,6 @@ def webpages_from_documents(docs: DataFrame) -> DataFrame:
         F.col("text"),
         F.col("lang"),
     )
-
-
-def load_webpages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return webpages_from_documents(read_documents(spark, sf_dir))
 
 
 def read_table_or_parquet(spark: SparkSession, name_or_path: str) -> DataFrame:

@@ -27,27 +27,59 @@ DOCS = [
 ]
 
 
+# one gazetteer per kernel plan: general (3-token entries), single-token
+# (θ=1, no stop words) and LE2 (1-2-token entries, θ > 0.5)
+SINGLE_TOKEN_GAZ = [
+    ("stones", "Stones"),
+    ("four", "Four"),
+    ("stones", "Stones Alias"),
+    ("the", "The"),
+    ("дра", "DRA"),
+    ("stones", "Stones Third"),
+]
+LE2_GAZ = [
+    ("fab four", "The Beatles"),
+    ("the stones", "The Stones"),
+    ("stones", "Stones"),
+    ("the stones", "Stones Alias"),
+    ("king", "King"),
+    ("four", "Four"),
+]
+
+LIGHT_COLUMNS = ["url", "sent_idx", "tok_idx", "resolved", "rank"]
+FULL_COLUMNS = [
+    "url", "sent_idx", "tok_idx", "begin", "end", "matched_value",
+    "resolved", "raw_value", "entity_id", "rank", "alternatives",
+]
+
+
 def kernel_expected(parser, docs, window_tokens=None, max_alternatives=5):
+    """Driver-side oracle on the walker's contract: each window is
+    ``parser.run(sentence, k, tokens=chunk)`` with spans slicing the
+    sentence."""
+    from bisect import bisect_right
+
     rows = []
     for url, text in docs:
         if not text:
             continue
-        for sent_idx, char_off, base_tok, window, toks in iter_windows(text, window_tokens):
-            starts = [s for s, _e, _t in toks]
-            from bisect import bisect_right
-
-            for pv in parser.run(window, max_alternatives):
+        for sent_idx, sent_off, base_tok, sent, chunk in iter_windows(text, window_tokens):
+            starts = [s for s, _e, _t in chunk]
+            for pv in parser.run(sent, max_alternatives, tokens=chunk):
+                assert sent[pv.range[0] : pv.range[1]] == pv.matched_value
                 rows.append(
                     (
                         url,
                         sent_idx,
                         base_tok + bisect_right(starts, pv.range[0]) - 1,
-                        char_off + pv.range[0],
-                        char_off + pv.range[1],
+                        sent_off + pv.range[0],
+                        sent_off + pv.range[1],
                         pv.matched_value,
                         pv.resolved_value.resolved,
                         pv.resolved_value.raw_value,
-                        tuple(a.resolved for a in pv.alternatives),
+                        pv.entity,
+                        pv.rank,
+                        tuple((a.resolved, a.raw_value) for a in pv.alternatives),
                     )
                 )
     return sorted(rows)
@@ -58,34 +90,59 @@ def parser():
     return ParserBuilder().set_gazetteer(GAZ).minimum_tokens_ratio(2.0 / 3.0).build()
 
 
-def spark_mentions(spark, parser, docs, window_tokens):
+@pytest.fixture(scope="module")
+def lane_parsers(parser):
+    """(name, parser) for every kernel plan, each asserted to engage."""
+    single = ParserBuilder().set_gazetteer(SINGLE_TOKEN_GAZ).minimum_tokens_ratio(1.0).build()
+    assert single._single_token_lookup() is not None
+    le2 = ParserBuilder().set_gazetteer(LE2_GAZ).minimum_tokens_ratio(0.6).build()
+    assert le2._single_token_lookup() is None and le2._le2_lookup() is not None
+    assert parser._single_token_lookup() is None and parser._le2_lookup() is None
+    return [("general", parser), ("single_token", single), ("le2", le2)]
+
+
+def spark_mentions(spark, parser, docs, window_tokens, max_alternatives=5, columns=None):
     bc = spark.sparkContext.broadcast(parser)
     df = spark.createDataFrame(docs, "url string, text string")
     out = extract_mentions(
-        df, bc, max_alternatives=5, window_tokens=window_tokens, num_partitions=4
+        df,
+        bc,
+        max_alternatives=max_alternatives,
+        window_tokens=window_tokens,
+        num_partitions=4,
+        columns=columns,
     ).collect()
-    return sorted(
-        (
-            r["url"],
-            r["sent_idx"],
-            r["tok_idx"],
-            r["begin"],
-            r["end"],
-            r["matched_value"],
-            r["resolved"],
-            r["raw_value"],
-            tuple(a["resolved"] for a in r["alternatives"]),
-        )
-        for r in out
-    )
+    rows = []
+    for r in out:
+        row = r.asDict()
+        if "alternatives" in row:
+            row["alternatives"] = tuple(
+                (a["resolved"], a["raw_value"]) for a in row["alternatives"]
+            )
+        rows.append(tuple(row[c] for c in columns or FULL_COLUMNS))
+    return sorted(rows)
 
 
-def test_extract_matches_kernel_no_windowing(spark, parser):
-    assert spark_mentions(spark, parser, DOCS, None) == kernel_expected(parser, DOCS, None)
+def assert_extract_matches_kernel(spark, lane_parsers, window_tokens):
+    """Every kernel plan x max_alternatives {0, 5} x {full schema, light
+    projection} must emit exactly the kernel oracle's rows."""
+    light_idx = [FULL_COLUMNS.index(c) for c in LIGHT_COLUMNS]
+    for name, parser in lane_parsers:
+        for k in (0, 5):
+            want = kernel_expected(parser, DOCS, window_tokens, k)
+            assert want, name
+            got = spark_mentions(spark, parser, DOCS, window_tokens, k)
+            assert got == want, (name, k)
+            got_light = spark_mentions(spark, parser, DOCS, window_tokens, k, LIGHT_COLUMNS)
+            assert got_light == sorted(tuple(r[i] for i in light_idx) for r in want), (name, k)
 
 
-def test_extract_matches_kernel_with_windows(spark, parser):
-    assert spark_mentions(spark, parser, DOCS, 4) == kernel_expected(parser, DOCS, 4)
+def test_extract_matches_kernel_no_windowing(spark, lane_parsers):
+    assert_extract_matches_kernel(spark, lane_parsers, None)
+
+
+def test_extract_matches_kernel_with_windows(spark, lane_parsers):
+    assert_extract_matches_kernel(spark, lane_parsers, 4)
 
 
 def test_mention_offsets_slice_original_text(spark, parser):
@@ -109,11 +166,13 @@ def test_split_sentences_offsets():
 def test_iter_windows_token_ordinals():
     text = "a b c d e f g. h i j"
     seen = []
-    for sent_idx, char_off, base_tok, window, toks in iter_windows(text, 3):
-        seen.append((sent_idx, base_tok, [t for _s, _e, t in toks]))
-        # rebased spans slice the window
-        for s, e, t in toks:
-            assert window[s:e] == t
+    for sent_idx, sent_off, base_tok, sentence, chunk in iter_windows(text, 3):
+        seen.append((sent_idx, base_tok, [t for _s, _e, t in chunk]))
+        # sentence-relative spans slice the sentence, and sent_off + span
+        # slices the document
+        for s, e, t in chunk:
+            assert sentence[s:e] == t
+            assert text[sent_off + s : sent_off + e] == t
     assert seen == [
         (0, 0, ["a", "b", "c"]),
         (1, 3, ["d", "e", "f"]),

@@ -12,7 +12,8 @@ def general_path(parser: Parser, text: str, max_alternatives: int):
 
     toks = tokenize(text)
     heap = parser._find_possible_matches(toks, parser.threshold, max_alternatives)
-    return parser._parse_input(text, toks, heap)
+    matches = parser._parse_input(toks, heap)
+    return parser._parsed_values(text, toks, matches, max_alternatives)
 
 
 def test_fast_path_engages_and_matches_general():

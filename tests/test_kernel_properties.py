@@ -34,6 +34,12 @@ def build(gaz, threshold, n_stop_words):
     )
 
 
+def _truncated(matches, max_alt):
+    """Fast-path match() entries carry every posting; the general plan keeps
+    the winner plus at most ``max_alt`` alternatives."""
+    return [(s, e, entries[: max_alt + 1]) for s, e, entries in matches]
+
+
 @settings(max_examples=300, deadline=None)
 @given(gazetteers, inputs, thresholds, n_stops, st.sampled_from([0, 2, 5]))
 def test_output_invariants(gaz, text, threshold, n_stop_words, max_alt):
@@ -99,12 +105,11 @@ def test_fast_path_equals_general(gaz, text, max_alt):
     machinery on arbitrary inputs."""
     parser = build(gaz, 1.0, 0)
     assert parser._single_token_lookup() is not None
-    fast = parser.run(text, max_alt)
     toks = tokenize(text)
     general = parser._parse_input(
-        text, toks, parser._find_possible_matches(toks, parser.threshold, max_alt)
+        toks, parser._find_possible_matches(toks, parser.threshold, max_alt)
     )
-    assert fast == general
+    assert _truncated(parser.match(toks, max_alt), max_alt) == general
 
 
 @settings(max_examples=200, deadline=None)
@@ -168,6 +173,6 @@ def test_le2_equals_general_property(gaz, text, threshold, n_stop_words, max_alt
     assert parser._le2_lookup() is not None or parser._single_token_lookup() is not None
     toks = tokenize(text)
     heap = parser._find_possible_matches(toks, parser.threshold, max_alt)
-    want = parser._parse_input(text, toks, heap)
-    assert parser.run(text, max_alt) == want
-    assert parser.run_light(text) == [(pv.resolved_value.resolved, pv.rank) for pv in want]
+    want = parser._parse_input(toks, heap)
+    assert _truncated(parser.match(toks, max_alt), max_alt) == want
+    assert parser.run_light(text) == [(e[0][2].resolved, e[0][1]) for _s, _e, e in want]

@@ -30,13 +30,13 @@ def kernel_triples(parser: Parser, pages, window_tokens):
     """Driver-side oracle: kernel mentions -> within-window ordered pairs."""
     expected = {}
     for url, text in pages:
-        for sent_idx, _off, base_tok, window, toks in iter_windows(text, window_tokens):
+        for sent_idx, _off, base_tok, sentence, chunk in iter_windows(text, window_tokens):
             from bisect import bisect_right
 
-            starts = [s for s, _e, _t in toks]
+            starts = [s for s, _e, _t in chunk]
             ms = [
                 (base_tok + bisect_right(starts, pv.range[0]) - 1, pv.resolved_value.resolved)
-                for pv in parser.run(window, 0)
+                for pv in parser.run(sentence, 0, tokens=chunk)
             ]
             ms.sort()
             for i in range(len(ms)):

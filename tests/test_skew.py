@@ -2,10 +2,16 @@
 one task absorbing the whole document's quadratic cost, and salted
 repartition must spread hot url prefixes."""
 
+import inspect
+
 import pytest
 from pyspark.sql import functions as F
 
-from gazetteer_entity_parser_spark.operators.extract import extract_mentions, iter_windows
+from gazetteer_entity_parser_spark.operators.extract import (
+    extract_mentions,
+    extract_triple_partials,
+    iter_windows,
+)
 from gazetteer_entity_parser_spark.sources.builder_job import (
     broadcast_parser,
     build_parser_distributed,
@@ -14,12 +20,23 @@ from gazetteer_entity_parser_spark.sources.builder_job import (
 from gazetteer_entity_parser_spark.sources.gazetteer import literal_gazetteer
 
 
+def _walks_windows(operator) -> bool:
+    """True when ``operator``'s executor-side batch function iterates the
+    shared window walker (a module global, so its name is in co_names)."""
+    return any(
+        inspect.iscode(c) and "iter_windows" in c.co_names
+        for c in operator.__code__.co_consts
+    )
+
+
 def test_giant_page_windows_bound_kernel_calls():
+    # the walker measured here is the one both extraction operators iterate
+    assert _walks_windows(extract_mentions) and _walks_windows(extract_triple_partials)
     # 200k-token page -> 20k windows of <=10 tokens; per-call state is bounded
     text = " ".join("tok%d" % (i % 50) for i in range(200_000))
     windows = list(iter_windows(text, 10))
     assert len(windows) == 20_000
-    assert all(len(toks) <= 10 for _s, _o, _b, _w, toks in windows)
+    assert all(len(chunk) <= 10 for _s, _o, _b, _sent, chunk in windows)
     # token ordinals are globally consecutive
     assert windows[-1][2] == 199_990
 
@@ -106,14 +123,12 @@ def test_ngram_hot_shingle_df_guard(spark):
 def test_multi_megabyte_single_doc_extraction(spark):
     """Stage-B robustness (SURVEY.md 4.3): one ~3.4 MB document (500k tokens,
     no sentence breaks) must stream through the kernel window-by-window —
-    iter_windows is a generator, so per-window state is bounded regardless of
-    document size, even with tiny Arrow batches."""
-    import inspect
-
-    from gazetteer_entity_parser_spark.operators.extract import iter_windows
-
-    # structural pin: windows are generated lazily, never materialized per doc
+    the operator iterates the iter_windows generator, so per-window state is
+    bounded regardless of document size, even with tiny Arrow batches."""
+    # structural pin: extract_mentions walks windows through the generator,
+    # so they are produced lazily, never materialized per doc
     assert inspect.isgeneratorfunction(iter_windows)
+    assert _walks_windows(extract_mentions)
 
     gaz = literal_gazetteer(spark, [("tok1", "TOK1"), ("tok2 tok3", "TOK23")])
     bc = broadcast_parser(spark, build_parser_distributed(gaz, threshold=1.0))
