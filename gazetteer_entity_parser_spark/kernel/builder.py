@@ -100,8 +100,10 @@ class ParserBuilder:
                 "it must be between 0.0 and 1.0"
             )
         registry = Registry()
-        for rank, (raw, resolved) in enumerate(self.gazetteer):
-            registry.add_value(tokens_only(raw), resolved, rank)
+        registry.extend(
+            (tokens_only(raw), resolved, rank)
+            for rank, (raw, resolved) in enumerate(self.gazetteer)
+        )
         registry.set_stop_words(
             self.n_gazetteer_stop_words or 0, self.additional_stop_words
         )
@@ -192,11 +194,12 @@ def load_parser(folder: str) -> Parser:
     with open(os.path.join(folder, config["parser_filename"]), encoding="utf-8") as fh:
         rows = json.load(fh)
 
+    rows.sort(key=lambda r: r["rank"])
     registry = Registry()
-    for row in sorted(rows, key=lambda r: r["rank"]):
-        ev = registry.add_value(row["tokens"], row["resolved_value"], row["rank"])
-        if ev is not None and row.get("is_injected"):
-            registry.injected.add(ev)
+    ids = registry.extend((r["tokens"], r["resolved_value"], r["rank"]) for r in rows)
+    registry.injected = frozenset(
+        ev for ev, r in zip(ids, rows) if ev is not None and r.get("is_injected")
+    )
     if "stop_words" in config:
         # restore the PERSISTED set verbatim: recomputing top-n here can flip
         # a doc-frequency tie when the dumped parser's interning order (e.g.

@@ -28,7 +28,7 @@ import heapq
 from dataclasses import dataclass
 
 from .fmath import check_threshold, f32
-from .registry import Registry
+from .registry import Registry, pylist
 from .tokenizer import tokenize
 
 
@@ -128,6 +128,22 @@ class ParsedValue:
     tok_range: tuple[int, int] = (-1, -1)
 
 
+class _Memo(dict):
+    """``memo[key]`` is ``fn(key)``, computed on first use: the kernel's
+    per-worker view of registry rows, which the registry stores as columns
+    (a hit is a plain dict lookup)."""
+
+    __slots__ = ("fn",)
+
+    def __init__(self, fn) -> None:
+        super().__init__()
+        self.fn = fn
+
+    def __missing__(self, key):
+        value = self[key] = self.fn(key)
+        return value
+
+
 class Parser:
     """Engine handle: a built registry + f32 threshold
     (reference: src/parser.rs:24-33)."""
@@ -136,38 +152,43 @@ class Parser:
         self.registry = registry
         self.threshold = f32(threshold)
         self.license_info = None
-        self._single_token_table = None
-        self._single_token_checked = False
-        self._le2_tables = None
-        self._le2_checked = False
-        self._entry_memo: dict[int, tuple[int, int, ResolvedValue]] = {}
+        self._invalidate_run_caches()
+
+    def __getstate__(self) -> dict:
+        # the run caches and memos are per process: a broadcast ships the
+        # registry columns only, however much this parser has run
+        return {
+            "registry": self.registry,
+            "threshold": self.threshold,
+            "license_info": self.license_info,
+        }
+
+    def __setstate__(self, state: dict) -> None:
+        self.__init__(state["registry"], state["threshold"])
+        self.license_info = state["license_info"]
 
     def _entry(self, entity_id: int) -> tuple[int, int, ResolvedValue]:
-        """Memoized ``(entity, rank, ResolvedValue)`` match entry (injection
-        returns a NEW Parser and in-place prepends clear the memo, so it
-        cannot go stale)."""
-        entry = self._entry_memo.get(entity_id)
-        if entry is None:
-            reg = self.registry
-            entry = (
-                entity_id,
-                reg.entity_rank[entity_id],
-                ResolvedValue(*reg.get_resolved_value(entity_id)),
-            )
-            self._entry_memo[entity_id] = entry
-        return entry
+        """The ``(entity, rank, ResolvedValue)`` match entry."""
+        rank, _tokens = self._entities[entity_id]
+        return (entity_id, rank, ResolvedValue(*self.registry.get_resolved_value(entity_id)))
 
     def _invalidate_run_caches(self) -> None:
-        """Drop lazily-built run-path caches after any in-place mutation of
-        the registry or threshold. The single-token dictionary fast path is
-        derived from postings + stop words + threshold on first run(); stale
-        copies would silently ignore later prepends (prepended values never
-        match, rebased ranks never win ties)."""
+        """(Re)create the lazily-built run-path caches, after any in-place
+        mutation of the registry or threshold. The single-token dictionary
+        fast path is derived from postings + stop words + threshold on first
+        run(); stale copies would silently ignore later prepends (prepended
+        values never match, rebased ranks never win ties). The memos hold
+        the registry rows the kernel touched: ``_postings`` per token id,
+        ``_entities`` (rank, token ids) and ``_entries`` (match entry) per
+        entity id."""
         self._single_token_table = None
         self._single_token_checked = False
         self._le2_tables = None
         self._le2_checked = False
-        self._entry_memo.clear()
+        reg = self.registry
+        self._postings = _Memo(lambda tid: reg.postings[tid])
+        self._entities = _Memo(reg.get_tokens)
+        self._entries = _Memo(self._entry)
 
     def set_threshold(self, threshold: float) -> None:
         """reference: src/parser.rs:119-121 (stored as f32)."""
@@ -313,17 +334,18 @@ class Parser:
             if (
                 not reg.stop_words
                 and self.threshold <= 1.0
-                and all(len(t) == 1 for t in reg.entity_tokens)
+                and (reg.entity_tokens.lengths() == 1).all()
             ):
                 # per token: the match entries of its postings in rank order;
                 # a single-token entity's raw_value IS its token string
+                ranks = pylist(reg.entity_rank)
+                resolved = pylist(reg.resolved)
                 table: dict[str, tuple] = {}
-                for token, tid in reg.token_ids.items():
-                    postings = sorted(reg.postings[tid], key=lambda ev: reg.entity_rank[ev])
+                for token, postings in zip(pylist(reg.tokens), reg.postings):
                     if postings:
                         table[token] = tuple(
-                            (ev, reg.entity_rank[ev], ResolvedValue(reg.resolved[ev], token))
-                            for ev in postings
+                            (ev, ranks[ev], ResolvedValue(resolved[ev], token))
+                            for ev in sorted(postings, key=ranks.__getitem__)
                         )
                 self._single_token_table = table
         return self._single_token_table
@@ -366,19 +388,19 @@ class Parser:
         if not self._le2_checked:
             self._le2_checked = True
             reg = self.registry
-            ranks = reg.entity_rank
             if (
-                reg.entity_tokens
+                len(reg.entity_tokens)
                 and 0.5 < self.threshold <= 1.0
-                and all(len(t) <= 2 for t in reg.entity_tokens)
-                and len(set(ranks)) == len(ranks)
+                and (reg.entity_tokens.lengths() <= 2).all()
+                and len(set(ranks := pylist(reg.entity_rank))) == len(ranks)
             ):
-                id_to_token = reg._id_to_token()
+                tokens = pylist(reg.tokens)
+                resolved = pylist(reg.resolved)
                 singles: dict[str, list] = {}
                 bigrams: dict[tuple[str, str], list] = {}
                 for ev, tok_ids in enumerate(reg.entity_tokens):
-                    strs = tuple(id_to_token[t] for t in tok_ids)
-                    entry = (ev, ranks[ev], ResolvedValue(reg.resolved[ev], " ".join(strs)))
+                    strs = tuple(tokens[t] for t in tok_ids)
+                    entry = (ev, ranks[ev], ResolvedValue(resolved[ev], " ".join(strs)))
                     if len(strs) == 1:
                         singles.setdefault(strs[0], []).append(entry)
                     else:
@@ -439,7 +461,7 @@ class Parser:
         (key, seq, PossibleMatch)."""
         reg = self.registry
         token_ids = reg.token_ids
-        postings = reg.postings
+        postings = self._postings
         stop_words = reg.stop_words
         edge_cases = reg.edge_cases
         partial: dict[int, PossibleMatch] = {}
@@ -506,7 +528,7 @@ class Parser:
         """Grow iff input-adjacent AND the token occurs in the entry after the
         last consumed entry position; otherwise flush (if ≥θ) and restart at
         this token's first entry position (reference: src/parser.rs:349-405)."""
-        otokens = self.registry.entity_tokens[pm.entity]
+        rank, otokens = self._entities[pm.entity]
 
         if token_idx == pm.last_token_in_input + 1:
             try:
@@ -532,7 +554,7 @@ class Parser:
         pm.first_token_in_resolution = pos
         pm.last_token_in_resolution = pos
         pm.n_consumed_tokens = 1
-        pm.rank = self.registry.entity_rank[pm.entity]
+        pm.rank = rank
         pm.alternatives = []
 
     # ---------------------------------------------------- match start/backtrack
@@ -544,9 +566,7 @@ class Parser:
         contiguous previously-skipped stop words backwards (decrementing the
         first-resolution cursor by one per absorbed word), then early-prune
         with an optimistic threshold check (reference: src/parser.rs:409-470)."""
-        reg = self.registry
-        rank = reg.entity_rank[res_val]
-        otokens = reg.entity_tokens[res_val]
+        rank, otokens = self._entities[res_val]
         pos = otokens.index(value)
         pm = PossibleMatch(
             entity=res_val,
@@ -589,7 +609,7 @@ class Parser:
         still above threshold; emitted spans claim their token positions
         (reference: src/parser.rs:506-572). Returns :meth:`match` positions."""
         reg = self.registry
-        entry = self._entry
+        entry = self._entries.__getitem__
         n_total_tokens = len(toks)
         taken: set[int] = set()
         out = []

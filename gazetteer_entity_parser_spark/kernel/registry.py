@@ -3,154 +3,319 @@
 Pure-Python re-expression of the reference registry
 (reference: src/parser_registry.rs:10-315 and src/symbol_table.rs:9-76).
 This object is what gets *broadcast* to every Spark executor; it is built
-either directly from a list of (raw_value, resolved_value) pairs (driver
-side) or from the output of the distributed DataFrame build job
-(see ..sources.builder_job).
+either from ordered ``(tokens, resolved, rank)`` rows (:meth:`Registry.extend`,
+driver side) or straight from the Arrow output of the distributed DataFrame
+build (:meth:`Registry.from_columns`, see ..sources.builder_job).
 
-Data layout (all plain picklable containers):
+Data layout (columns, not per-row Python objects — a broadcast registry is
+unpickled in every Python worker, where 10^5 entries as lists, tuples and
+ints cost tens of MB):
 
-- ``token_ids``: dict token-string -> token id; ids are dense and assigned in
-  first-appearance order over the gazetteer scanned rank-major/position-minor
-  (reference: src/symbol_table.rs:17-27 — BTreeMap + monotonic counter).
-- ``postings``: list indexed by token id; each entry is an ascending list of
-  entity ids containing that token, deduplicated (reference:
-  src/parser_registry.rs:19 ``token_to_resolved_values: Vec<BTreeSet<u32>>``).
-  Ascending order falls out of monotonically increasing entity ids.
-- ``entity_rank`` / ``entity_tokens``: per entity id, its popularity rank and
-  the tuple of token ids of its raw value (reference:
-  src/parser_registry.rs:21 ``resolved_value_to_tokens: Vec<(Rank, Vec<u32>)>``).
-- ``resolved``: per entity id, the resolved (canonical) string. The same
-  canonical string gets a **fresh id per alias** (reference:
-  src/symbol_table.rs:49-57 ResolvedSymbolTable allows duplicates;
-  src/parser_registry.rs:43-45 "We force add the new resolved value").
-- ``stop_words`` / ``edge_cases`` / ``injected``: sets of token ids /
-  entity ids (reference: src/parser_registry.rs:27-31).
+- ``tokens``: Arrow string column, the token strings in id order; ids are
+  dense and assigned in first-appearance order over the gazetteer scanned
+  rank-major/position-minor (reference: src/symbol_table.rs:17-27 — BTreeMap
+  + monotonic counter). It is also the id -> token inverse.
+- ``token_ids``: dict token-string -> token id, the one per-token Python
+  structure; rebuilt from ``tokens`` on unpickle, never shipped.
+- ``entity_tokens``: int32 :class:`Csr`; row ``ev`` holds the token ids of
+  entity ``ev``'s raw value in order (reference: src/parser_registry.rs:21
+  ``resolved_value_to_tokens: Vec<(Rank, Vec<u32>)>``).
+- ``entity_rank``: Arrow int64 column, per entity id its popularity rank
+  (NULL where the gazetteer row had none).
+- ``resolved``: Arrow string column, per entity id the resolved (canonical)
+  string. The same canonical string gets a **fresh id per alias**
+  (reference: src/symbol_table.rs:49-57 ResolvedSymbolTable allows
+  duplicates; src/parser_registry.rs:43-45 "We force add the new resolved
+  value").
+- ``postings``: int32 :class:`Csr` indexed by token id; each row holds the
+  ascending, deduplicated ids of the entities containing that token
+  (reference: src/parser_registry.rs:19 ``token_to_resolved_values:
+  Vec<BTreeSet<u32>>``). Derived from ``entity_tokens`` whenever that
+  changes (and on unpickle), so it is never shipped either. Tokens no entity
+  contains (additional stop words) have empty rows.
+- ``stop_words`` / ``edge_cases`` / ``injected``: small frozensets of token
+  ids / entity ids (reference: src/parser_registry.rs:27-31).
+
+Row accessors (``entity_tokens[ev]``, ``postings[tid]``, :meth:`get_tokens`,
+:meth:`get_resolved_value`) build Python objects per call; the kernel reads
+them through per-worker memos (see .parser).
 """
 
 from __future__ import annotations
 
-from .tokenizer import tokens_only
+from collections.abc import Iterable
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+
+
+class Csr:
+    """Rows of int32 ids stored flat: row ``i`` is
+    ``values[offsets[i]:offsets[i + 1]]``. Indexing and iteration yield
+    tuples of Python ints."""
+
+    __slots__ = ("offsets", "values")
+
+    def __init__(self, offsets: np.ndarray, values: np.ndarray) -> None:
+        self.offsets = offsets
+        self.values = values
+
+    def __len__(self) -> int:
+        return len(self.offsets) - 1
+
+    def __getitem__(self, i: int) -> tuple[int, ...]:
+        return tuple(self.values[self.offsets[i] : self.offsets[i + 1]].tolist())
+
+    def __iter__(self):
+        values = self.values
+        off = self.offsets.tolist()
+        return (tuple(values[a:b].tolist()) for a, b in zip(off, off[1:]))
+
+    def lengths(self) -> np.ndarray:
+        return np.diff(self.offsets)
+
+    def owners(self) -> np.ndarray:
+        """The row index of each value."""
+        return np.repeat(np.arange(len(self)), self.lengths())
+
+    def __eq__(self, other: object) -> bool:
+        if not isinstance(other, Csr):
+            return NotImplemented
+        return np.array_equal(self.offsets, other.offsets) and np.array_equal(
+            self.values, other.values
+        )
+
+
+def _index(entity_tokens: Csr, n_tokens: int) -> Csr:
+    """Postings from the entity-token CSR: the distinct (token, entity) pairs
+    in sorted order, i.e. per token its ascending entity ids, with a token's
+    repeats inside one value dropped (BTreeSet semantics)."""
+    pairs = np.unique(
+        (entity_tokens.values.astype(np.int64) << 32) | entity_tokens.owners()
+    )
+    offsets = np.zeros(n_tokens + 1, np.int32)
+    np.cumsum(np.bincount(pairs >> 32, minlength=n_tokens), out=offsets[1:])
+    return Csr(offsets, (pairs & 0xFFFFFFFF).astype(np.int32))
+
+
+def _concat(column: pa.Array, values: list) -> pa.Array:
+    return pa.concat_arrays([column, pa.array(values, column.type)])
+
+
+def pylist(column: pa.Array) -> list:
+    """``column.to_pylist()``, through numpy where no NULL forces the slow
+    per-element path."""
+    if column.null_count:
+        return column.to_pylist()
+    return column.to_numpy(zero_copy_only=False).tolist()
 
 
 class Registry:
     __slots__ = (
+        "tokens",
         "token_ids",
-        "postings",
-        "entity_rank",
         "entity_tokens",
+        "entity_rank",
         "resolved",
+        "postings",
         "n_stop_words",
         "additional_stop_words",
         "stop_words",
         "edge_cases",
         "injected",
-        "_id2tok",
     )
 
     def __init__(self) -> None:
-        self.token_ids: dict[str, int] = {}
-        self.postings: list[list[int]] = []
-        self.entity_rank: list[int] = []
-        self.entity_tokens: list[tuple[int, ...]] = []
-        self.resolved: list[str] = []
+        self._install(
+            pa.array([], pa.string()),
+            Csr(np.zeros(1, np.int32), np.zeros(0, np.int32)),
+            pa.array([], pa.int64()),
+            pa.array([], pa.string()),
+            {},
+        )
         self.n_stop_words: int = 0
-        self.additional_stop_words: list[int] = []
+        self.additional_stop_words: tuple[int, ...] = ()
         self.stop_words: frozenset[int] = frozenset()
         self.edge_cases: frozenset[int] = frozenset()
-        self.injected: set[int] = set()
-        self._id2tok: dict[int, str] | None = None  # lazy inverse, len-guarded
+        self.injected: frozenset[int] = frozenset()
 
-    def _id_to_token(self) -> dict[int, str]:
-        """Inverse token map, cached; tokens are append-only so a length
-        check is a sound invalidation test."""
-        cache = self._id2tok
-        if cache is None or len(cache) != len(self.token_ids):
-            cache = {tid: tok for tok, tid in self.token_ids.items()}
-            self._id2tok = cache
-        return cache
+    def _install(
+        self,
+        tokens: pa.Array,
+        entity_tokens: Csr,
+        entity_rank: pa.Array,
+        resolved: pa.Array,
+        token_ids: dict[str, int] | None = None,
+    ) -> None:
+        """Set the columns and derive the token dict (unless given) and the
+        postings from them."""
+        self.tokens = tokens
+        self.entity_tokens = entity_tokens
+        self.entity_rank = entity_rank
+        self.resolved = resolved
+        if token_ids is None:
+            token_ids = {tok: tid for tid, tok in enumerate(pylist(tokens))}
+        self.token_ids = token_ids
+        self.postings = _index(entity_tokens, len(tokens))
+
+    @classmethod
+    def from_columns(
+        cls,
+        tokens: pa.Array,
+        entity_offsets,
+        entity_token_ids,
+        entity_rank: pa.Array,
+        resolved: pa.Array,
+    ) -> "Registry":
+        """A registry over given columns (stop words unset): token strings in
+        id order, the entity-token CSR, ranks and resolved strings in entity
+        id order."""
+        reg = cls()
+        reg._install(
+            tokens.cast(pa.string()),
+            Csr(
+                np.asarray(entity_offsets, np.int32),
+                np.asarray(entity_token_ids, np.int32),
+            ),
+            entity_rank.cast(pa.int64()),
+            resolved.cast(pa.string()),
+        )
+        return reg
+
+    def __getstate__(self):
+        # token_ids and postings are derived: shipping them would cost more
+        # bytes and a larger unpickle than rebuilding them
+        return (
+            self.tokens,
+            self.entity_tokens.offsets,
+            self.entity_tokens.values,
+            self.entity_rank,
+            self.resolved,
+            self.n_stop_words,
+            self.additional_stop_words,
+            self.stop_words,
+            self.edge_cases,
+            self.injected,
+        )
+
+    def __setstate__(self, state) -> None:
+        tokens, offsets, values, rank, resolved, *rest = state
+        self._install(tokens, Csr(offsets, values), rank, resolved)
+        (
+            self.n_stop_words,
+            self.additional_stop_words,
+            self.stop_words,
+            self.edge_cases,
+            self.injected,
+        ) = rest
 
     # ------------------------------------------------------------------ build
 
-    def _intern_token(self, token: str) -> int:
-        """reference: src/symbol_table.rs:17-27 (add_symbol)."""
-        tid = self.token_ids.get(token)
-        if tid is None:
-            tid = len(self.token_ids)
-            self.token_ids[token] = tid
-        return tid
+    def _intern(self, tokens: Iterable[str], new_tokens: list[str]) -> list[int]:
+        """Token ids of ``tokens``, interning unseen ones after the existing
+        ids (reference: src/symbol_table.rs:17-27 add_symbol); the unseen
+        strings are appended to ``new_tokens`` in id order."""
+        token_ids = self.token_ids
+        out = []
+        for token in tokens:
+            tid = token_ids.get(token)
+            if tid is None:
+                tid = token_ids[token] = len(token_ids)
+                new_tokens.append(token)
+            out.append(tid)
+        return out
+
+    def extend(self, rows: Iterable[tuple[list[str], str, int]]) -> list[int | None]:
+        """Append ordered ``(tokens, resolved_value, rank)`` rows as new
+        entities, interning unseen tokens after the existing ones, so
+        existing token and entity ids stay stable. The bulk constructor every
+        row-based build goes through; ``Registry().extend(rows)`` is a fresh
+        build. Returns each row's new entity id, None for empty values
+        (reference: src/parser_registry.rs:38-65). Duplicate resolved strings
+        always get a fresh entity id (multi-alias support). Stop words and
+        edge cases are left to the caller to recompute."""
+        new_tokens: list[str] = []
+        flat: list[int] = []
+        ends: list[int] = []
+        resolved: list[str] = []
+        ranks: list[int] = []
+        ids: list[int | None] = []
+        et = self.entity_tokens
+        base, ev = int(et.offsets[-1]), len(et)
+        for tokens, resolved_value, rank in rows:
+            if not tokens:
+                ids.append(None)
+                continue
+            flat += self._intern(tokens, new_tokens)
+            ends.append(base + len(flat))
+            resolved.append(resolved_value)
+            ranks.append(rank)
+            ids.append(ev)
+            ev += 1
+        self._install(
+            _concat(self.tokens, new_tokens),
+            Csr(
+                np.concatenate([et.offsets, np.asarray(ends, np.int32)]),
+                np.concatenate([et.values, np.asarray(flat, np.int32)]),
+            ),
+            _concat(self.entity_rank, ranks),
+            _concat(self.resolved, resolved),
+            self.token_ids,
+        )
+        return ids
 
     def add_value(self, tokens: list[str], resolved_value: str, rank: int) -> int | None:
-        """Register one (tokenized raw value, resolved value) at ``rank``.
-
-        Returns the new entity id, or None for empty values
-        (reference: src/parser_registry.rs:38-65). Duplicate resolved strings
-        always get a fresh entity id (multi-alias support).
-        """
-        if not tokens:
-            return None
-        ev = len(self.resolved)
-        self.resolved.append(resolved_value)
-        self.entity_rank.append(rank)
-        tok_ids = []
-        for token in tokens:
-            tid = self._intern_token(token)
-            if tid >= len(self.postings):
-                self.postings.append([ev])
-            else:
-                plist = self.postings[tid]
-                # entity ids only grow, so appending keeps the list sorted;
-                # dedup repeated tokens within one value (BTreeSet semantics)
-                if not plist or plist[-1] != ev:
-                    plist.append(ev)
-            tok_ids.append(tid)
-        self.entity_tokens.append(tuple(tok_ids))
-        return ev
-
-    def add_raw_value(self, raw_value: str, resolved_value: str, rank: int) -> int | None:
-        return self.add_value(tokens_only(raw_value), resolved_value, rank)
+        """Register one value; see :meth:`extend`."""
+        return self.extend([(tokens, resolved_value, rank)])[0]
 
     def prepend_values(self, values: list[tuple[list[str], str]]) -> list[int]:
         """Prepend tokenized values; rebase existing ranks by +n and recompute
         stop words (reference: src/parser_registry.rs:69-84)."""
         n = len(values)
-        self.entity_rank = [r + n for r in self.entity_rank]
-        out = []
-        for rank, (tokens, resolved_value) in enumerate(values):
-            ev = self.add_value(tokens, resolved_value, rank)
-            if ev is not None:
-                out.append(ev)
+        self.entity_rank = pc.add(self.entity_rank, pa.scalar(n, pa.int64()))
+        ids = self.extend(
+            (tokens, resolved_value, rank)
+            for rank, (tokens, resolved_value) in enumerate(values)
+        )
         self.set_top_stop_words(self.n_stop_words)
-        return out
+        return [ev for ev in ids if ev is not None]
 
     # ------------------------------------------------------------- stop words
 
-    def _intern_word(self, word: str) -> int:
-        """Intern a word that may be absent from the gazetteer — such tokens
-        get an empty postings list so every tid indexes postings safely."""
-        tid = self._intern_token(word)
-        if tid >= len(self.postings):
-            self.postings.append([])
-        return tid
+    def _intern_words(self, words: Iterable[str]) -> list[int]:
+        """Intern words that may be absent from the gazetteer — such tokens
+        get an empty postings row so every tid indexes postings safely."""
+        new_tokens: list[str] = []
+        tids = self._intern(words, new_tokens)
+        if new_tokens:
+            self._install(
+                _concat(self.tokens, new_tokens),
+                self.entity_tokens,
+                self.entity_rank,
+                self.resolved,
+                self.token_ids,
+            )
+        return tids
 
     def _recompute_edge_cases(self) -> None:
         """Edge cases = entities all of whose tokens are stop words — a
         deterministic function of the current stop-word set
         (reference: src/parser_registry.rs:159-166)."""
-        sw = self.stop_words
-        self.edge_cases = frozenset(
-            ev
-            for ev, toks in enumerate(self.entity_tokens)
-            if all(t in sw for t in toks)
-        )
+        et = self.entity_tokens
+        is_stop = np.zeros(len(self.tokens), bool)
+        is_stop[list(self.stop_words)] = True
+        n_other = np.bincount(et.owners()[~is_stop[et.values]], minlength=len(et))
+        self.edge_cases = frozenset(np.flatnonzero(n_other == 0).tolist())
 
     def set_stop_words(
         self, n_stop_words: int, additional_stop_words: list[str] | None = None
     ) -> None:
         """Intern additional stop words then recompute the top-n set
         (reference: src/parser_registry.rs:118-139)."""
-        self.additional_stop_words = [
-            self._intern_word(w) for w in additional_stop_words or []
-        ]
+        self.additional_stop_words = tuple(
+            self._intern_words(additional_stop_words or [])
+        )
         self.set_top_stop_words(n_stop_words)
 
     def set_top_stop_words(self, n_stop_words: int) -> None:
@@ -159,8 +324,8 @@ class Registry:
         reference: src/parser_registry.rs:141-157), union the additional
         words."""
         self.n_stop_words = n_stop_words
-        order = sorted(range(len(self.postings)), key=lambda tid: -len(self.postings[tid]))
-        top = order[:n_stop_words]
+        order = np.argsort(-self.postings.lengths(), kind="stable")
+        top = order[:n_stop_words].tolist()
         self.stop_words = frozenset(top) | frozenset(self.additional_stop_words)
         self._recompute_edge_cases()
 
@@ -177,10 +342,8 @@ class Registry:
         resolve differently than the parser that was dumped. The persisted
         set is the behavior contract; edge cases are re-derived from it."""
         self.n_stop_words = n_stop_words
-        self.additional_stop_words = [
-            self._intern_word(w) for w in additional_stop_words
-        ]
-        self.stop_words = frozenset(self._intern_word(w) for w in stop_words)
+        self.additional_stop_words = tuple(self._intern_words(additional_stop_words))
+        self.stop_words = frozenset(self._intern_words(stop_words))
         self._recompute_edge_cases()
 
     # -------------------------------------------------------------- injection
@@ -195,27 +358,21 @@ class Registry:
         previously injected rows), splice the new values in with rank
         rebasing, and rebuild the registry from scratch, recomputing stop
         words with the stored n + additional words
-        (reference: src/parser_registry.rs:199-254)."""
-        base = self.get_entity_values(include_injected=not from_vanilla)
-        cleaned = [(toks, res) for toks, res in new_values if toks]
-        rows: list[tuple[list[str], str, bool]] = []
-        if prepend:
-            rows.extend((toks, res, True) for toks, res in cleaned)
-            rows.extend((toks, res, inj) for toks, res, inj, _rank in base)
-        else:
-            rows.extend((toks, res, inj) for toks, res, inj, _rank in base)
-            rows.extend((toks, res, True) for toks, res in cleaned)
+        (reference: src/parser_registry.rs:199-254). Provenance of previous
+        injections survives non-vanilla injects through the rows'
+        is_injected flags (the rebuild reassigns entity ids)."""
+        base = [
+            (toks, res, inj)
+            for toks, res, inj, _rank in self.get_entity_values(
+                include_injected=not from_vanilla
+            )
+        ]
+        cleaned = [(toks, res, True) for toks, res in new_values if toks]
+        rows = cleaned + base if prepend else base + cleaned
 
         new = Registry()
-        if not from_vanilla:
-            # provenance of previous injections survives non-vanilla injects,
-            # but ids are reassigned by the rebuild below; carried via rows'
-            # is_injected flags instead of the old id set
-            pass
-        for rank, (toks, res, is_injected) in enumerate(rows):
-            ev = new.add_value(toks, res, rank)
-            if ev is not None and is_injected:
-                new.injected.add(ev)
+        ids = new.extend((toks, res, rank) for rank, (toks, res, _inj) in enumerate(rows))
+        new.injected = frozenset(ev for ev, row in zip(ids, rows) if row[2])
         additional = [self.token_string(t) for t in self.additional_stop_words]
         new.set_stop_words(self.n_stop_words, additional)
         return new
@@ -225,14 +382,18 @@ class Registry:
     ) -> list[tuple[list[str], str, bool, int]]:
         """Invert the registry back to (tokens, resolved, is_injected, rank)
         rows sorted by rank (reference: src/parser_registry.rs:259-290)."""
-        id_to_token = self._id_to_token()
-        out = []
-        for ev, res in enumerate(self.resolved):
-            is_injected = ev in self.injected
-            if not include_injected and is_injected:
-                continue
-            toks = [id_to_token[t] for t in self.entity_tokens[ev]]
-            out.append((toks, res, is_injected, self.entity_rank[ev]))
+        tokens = pylist(self.tokens)
+        out = [
+            ([tokens[t] for t in toks], res, ev in self.injected, rank)
+            for ev, (toks, res, rank) in enumerate(
+                zip(
+                    self.entity_tokens,
+                    pylist(self.resolved),
+                    pylist(self.entity_rank),
+                )
+            )
+            if include_injected or ev not in self.injected
+        ]
         out.sort(key=lambda row: row[3])
         return out
 
@@ -242,46 +403,40 @@ class Registry:
         return self.token_ids.get(token)
 
     def get_tokens(self, entity_id: int) -> tuple[int, tuple[int, ...]]:
-        return self.entity_rank[entity_id], self.entity_tokens[entity_id]
+        return self.entity_rank[entity_id].as_py(), self.entity_tokens[entity_id]
 
     def is_edge_case(self, entity_id: int) -> bool:
         return entity_id in self.edge_cases
 
     def token_string(self, token_idx: int) -> str:
-        # cached inverse map: a linear scan here made injection
-        # O(|additional stop words| * |vocabulary|)
-        return self._id_to_token()[token_idx]
+        return self.tokens[token_idx].as_py()
 
     def get_resolved_value(self, entity_id: int) -> tuple[str, str]:
         """(resolved, raw_value) where raw_value is the interned tokens
         re-joined with single spaces — whitespace-normalizing
         (reference: src/parser_registry.rs:175-192)."""
-        id_to_token = self._id_to_token()
-        raw = " ".join(id_to_token[t] for t in self.entity_tokens[entity_id])
-        return self.resolved[entity_id], raw
+        raw = " ".join(self.token_string(t) for t in self.entity_tokens[entity_id])
+        return self.resolved[entity_id].as_py(), raw
 
     # ------------------------------------------------------ config snapshots
 
     def get_stop_words(self) -> set[str]:
-        id_to_token = self._id_to_token()
-        return {id_to_token[t] for t in self.stop_words}
+        return {self.token_string(t) for t in self.stop_words}
 
     def get_additional_stop_words(self) -> set[str]:
-        id_to_token = self._id_to_token()
-        return {id_to_token[t] for t in self.additional_stop_words}
+        return {self.token_string(t) for t in self.additional_stop_words}
 
     def get_edge_cases(self) -> set[str]:
-        return {self.resolved[ev] for ev in self.edge_cases}
+        return {self.resolved[ev].as_py() for ev in self.edge_cases}
 
     def __eq__(self, other: object) -> bool:
         if not isinstance(other, Registry):
             return NotImplemented
         return (
-            self.token_ids == other.token_ids
-            and self.postings == other.postings
-            and self.entity_rank == other.entity_rank
+            self.tokens.equals(other.tokens)
             and self.entity_tokens == other.entity_tokens
-            and self.resolved == other.resolved
+            and self.entity_rank.equals(other.entity_rank)
+            and self.resolved.equals(other.resolved)
             and self.stop_words == other.stop_words
             and self.edge_cases == other.edge_cases
             and self.injected == other.injected

@@ -8,12 +8,15 @@ Stages (SURVEY.md §4.3):
      checkpointed to parquet partitioned by ``bucket = pmod(xxhash64(url), P)``
      so any bucket replays independently (kernel is deterministic =>
      rewrite-same-bucket is idempotent).
-  C. triples: windowed co-occurrence self-join.
+  C. triples: windowed co-occurrence pairs by grouped pair expansion (one
+     shuffle over the mention checkpoint, no self-join).
   D. canonicalize + MERGE INTO the triples store (Iceberg or parquet).
 
-Lineage: one row per bucket per stage (input rows, output rows, checksum) —
-written next to each checkpoint; `replay` recomputes only buckets whose
-checkpoint is missing/corrupt and verifies against lineage.
+Lineage: one row per bucket per stage (output rows, checksum) — written next
+to each checkpoint. ``replay_buckets`` rewrites the checkpoint partitions of
+the buckets its caller names, with the gazetteer ``run_pipeline`` would
+build; it neither detects missing or corrupt buckets nor verifies the result
+against lineage (that check is ROADMAP item 3).
 """
 
 from __future__ import annotations
@@ -61,6 +64,17 @@ def lineage_for(df: DataFrame, stage: str, key: str = "url") -> DataFrame:
     )
 
 
+def _gazetteer(docs: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    """The gazetteer both ``run_pipeline`` and ``replay_buckets`` build the
+    parser from (derived from the corpus here; production passes its own
+    gazetteer DataFrame)."""
+    if cfg.use_alias_gazetteer:
+        from ..sources.gazetteer import alias_gazetteer
+
+        return alias_gazetteer(docs.select(F.col("text")), cfg.n_entities)
+    return vocabulary_gazetteer(docs.select(F.col("text")), cfg.n_entities)
+
+
 def run_pipeline(
     spark: SparkSession,
     docs: DataFrame,
@@ -77,14 +91,8 @@ def run_pipeline(
     stage_seconds: dict[str, float] = {}
     t0 = time.perf_counter()
 
-    # ---- Stage A: build + broadcast (gazetteer derived from the corpus here;
-    # production passes its own gazetteer DataFrame)
-    if cfg.use_alias_gazetteer:
-        from ..sources.gazetteer import alias_gazetteer
-
-        gaz = alias_gazetteer(docs.select(F.col("text")), cfg.n_entities)
-    else:
-        gaz = vocabulary_gazetteer(docs.select(F.col("text")), cfg.n_entities)
+    # ---- Stage A: build + broadcast
+    gaz = _gazetteer(docs, cfg)
     parser = build_parser_distributed(
         gaz, cfg.threshold, cfg.n_stop_words, cfg.additional_stop_words
     )
@@ -151,27 +159,34 @@ def replay_buckets(
     parser=None,
 ) -> None:
     """Recompute ONLY the given mention buckets and rewrite their checkpoint
-    partitions. The kernel is deterministic, so a replayed bucket is
-    byte-content-identical to the original run — pinned by
-    tests/test_pipeline.py (checkpoint-replay idempotence)."""
+    partitions; the other buckets' partitions are left as they are. Without
+    ``parser`` the parser is rebuilt from the gazetteer ``run_pipeline``
+    builds for ``cfg``. The kernel is deterministic, so a replayed bucket is
+    row-identical to the original run — pinned by tests/test_pipeline.py
+    (checkpoint-replay idempotence). Which buckets need replaying is the
+    caller's call: nothing here detects or verifies a bad bucket."""
     cfg = cfg or PipelineConfig()
     if parser is None:
-        gaz = vocabulary_gazetteer(docs.select(F.col("text")), cfg.n_entities)
         parser = build_parser_distributed(
-            gaz, cfg.threshold, cfg.n_stop_words, cfg.additional_stop_words
+            _gazetteer(docs, cfg), cfg.threshold, cfg.n_stop_words,
+            cfg.additional_stop_words,
         )
     bc = broadcast_parser(spark, parser)
-    subset = docs.where(_bucket("url", cfg.n_buckets).isin(buckets))
-    mentions = extract_mentions(
-        subset.select("url", "text"),
-        bc,
-        max_alternatives=cfg.max_alternatives,
-        window_tokens=cfg.window_tokens,
-    ).withColumn("bucket", _bucket("url", cfg.n_buckets))
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    mentions.write.mode("overwrite").partitionBy("bucket").parquet(
-        os.path.join(workdir, "mentions")
-    )
+    try:
+        subset = docs.where(_bucket("url", cfg.n_buckets).isin(buckets))
+        mentions = extract_mentions(
+            subset.select("url", "text"),
+            bc,
+            max_alternatives=cfg.max_alternatives,
+            window_tokens=cfg.window_tokens,
+        ).withColumn("bucket", _bucket("url", cfg.n_buckets))
+        # dynamic overwrite for this write only: the session conf would make
+        # every later overwrite in the session replace partitions, not paths
+        mentions.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("bucket").parquet(os.path.join(workdir, "mentions"))
+    finally:
+        bc.unpersist()
 
 
 def docs_from_sf_dir(spark: SparkSession, sf_dir: str) -> DataFrame:

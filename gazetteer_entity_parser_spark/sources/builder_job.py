@@ -30,6 +30,7 @@ never shuffles on gazetteer keys — the index travels as a broadcast.
 from __future__ import annotations
 
 import pandas as pd
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -181,8 +182,10 @@ def build_registry_distributed(
                 )
             )
             reg = Registry()
-            for r in probe:
-                reg.add_raw_value(r["raw_value"], r["resolved_value"], r["rank"])
+            reg.extend(
+                (tokens_only(r["raw_value"]), r["resolved_value"], r["rank"])
+                for r in probe
+            )
             reg.set_stop_words(n_stop_words, additional_stop_words)
             return reg
 
@@ -203,29 +206,22 @@ def build_registry_distributed(
             .select("resolved_value", "rank", "tokens")
             .toArrow()
         )
-        tok_tbl = frames["tokens"].orderBy("token_id").select("token").toArrow()
-
-        reg = Registry()
-        # token ids first-appearance order == kernel interning order; rebuild
-        # the exact same structures without re-scanning strings
-        tokens = tok_tbl.column("token").to_pylist()
-        reg.token_ids = {t: i for i, t in enumerate(tokens)}
-        reg.postings = [[] for _ in tokens]
-        token_ids = reg.token_ids
-        for resolved_value, rank, toks in zip(
-            ent_tbl.column("resolved_value").to_pylist(),
-            ent_tbl.column("rank").to_pylist(),
-            ent_tbl.column("tokens").to_pylist(),
-        ):
-            ev = len(reg.resolved)
-            reg.resolved.append(resolved_value)
-            reg.entity_rank.append(rank)
-            tok_ids = tuple(token_ids[t] for t in toks)
-            reg.entity_tokens.append(tok_ids)
-            for tid in tok_ids:
-                plist = reg.postings[tid]
-                if not plist or plist[-1] != ev:
-                    plist.append(ev)
+        tokens = (
+            frames["tokens"].orderBy("token_id").select("token").toArrow()
+            .column("token").combine_chunks()
+        )
+        # token ids are row positions (first-appearance order == kernel
+        # interning order), so the entity-token CSR is the tokens list
+        # column with each string replaced by its row in ``tokens``
+        lists = ent_tbl.column("tokens").combine_chunks()
+        offsets = lists.offsets.to_numpy()
+        reg = Registry.from_columns(
+            tokens,
+            offsets - offsets[0],
+            pc.index_in(lists.flatten(), value_set=tokens).to_numpy(),
+            ent_tbl.column("rank").combine_chunks(),
+            ent_tbl.column("resolved_value").combine_chunks(),
+        )
     finally:
         entities.unpersist()
     reg.set_stop_words(n_stop_words, additional_stop_words)

@@ -100,7 +100,7 @@ def test_null_raw_value_rows_equal_on_both_build_paths(spark):
     fast = build_registry_distributed(gaz, n_stop_words=1)
     slow = build_registry_distributed(gaz, n_stop_words=1, small_gazetteer_rows=0)
     assert fast == slow
-    assert fast.resolved == ["A", "C"]
+    assert fast.resolved.to_pylist() == ["A", "C"]
 
 
 def test_null_rank_rows_equal_on_both_build_paths(spark):
@@ -116,4 +116,4 @@ def test_null_rank_rows_equal_on_both_build_paths(spark):
     fast = build_registry_distributed(gaz)
     slow = build_registry_distributed(gaz, small_gazetteer_rows=0)
     assert fast == slow
-    assert fast.resolved[0] == "B"  # NULL rank first on both paths
+    assert fast.resolved[0].as_py() == "B"  # NULL rank first on both paths

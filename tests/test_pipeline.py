@@ -121,3 +121,38 @@ def test_checkpoint_replay_idempotent(spark, result):
         )
     )
     assert lineage_after == lineage_before
+
+
+def _mention_rows(spark, path):
+    return sorted(map(tuple, spark.read.parquet(path).drop("alternatives").collect()))
+
+
+def test_alias_gazetteer_replay_rebuilds_same_parser(spark, sf_smoke, tmp_path):
+    """Without ``parser=`` a replay rebuilds the parser from the gazetteer
+    the run used, here the alias gazetteer (whose two-token aliases change
+    mention spans against the vocabulary gazetteer)."""
+    cfg = PipelineConfig(
+        n_entities=20, threshold=1.0, window_tokens=10, n_buckets=8,
+        use_alias_gazetteer=True,
+    )
+    docs = docs_from_sf_dir(spark, sf_smoke)
+    res = run_pipeline(spark, docs, str(tmp_path), cfg)
+    assert res["mentions"].where(F.col("end") - F.col("begin") > 0).where(
+        F.col("matched_value").contains(" ")
+    ).count() > 0  # the aliases matched
+    before = _mention_rows(spark, res["mentions_path"])
+
+    shutil.rmtree(f"{res['mentions_path']}/bucket=5")
+    replay_buckets(spark, docs, str(tmp_path), [5], cfg)
+    assert _mention_rows(spark, res["mentions_path"]) == before
+
+
+def test_replay_leaves_session_conf_unchanged(spark, result):
+    res, docs, workdir = result
+    key = "spark.sql.sources.partitionOverwriteMode"
+    conf_before = spark.conf.get(key)
+    before = _mention_rows(spark, res["mentions_path"])
+    replay_buckets(spark, docs, workdir, [1], CFG, parser=res["parser"])
+    assert spark.conf.get(key) == conf_before == "STATIC"
+    # the replay overwrote bucket 1 only
+    assert _mention_rows(spark, res["mentions_path"]) == before

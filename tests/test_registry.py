@@ -31,7 +31,7 @@ def test_duplicate_resolved_gets_fresh_id():
     i1 = reg.add_value(["blink"], "Blink-182", 0)
     i2 = reg.add_value(["blink", "182"], "Blink-182", 1)
     assert i1 != i2
-    assert reg.resolved[i1] == reg.resolved[i2] == "Blink-182"
+    assert reg.get_resolved_value(i1)[0] == reg.get_resolved_value(i2)[0] == "Blink-182"
 
 
 def test_empty_value_rejected():

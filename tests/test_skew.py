@@ -63,7 +63,7 @@ def test_prepend_and_rebroadcast(spark):
     assert out[0].resolved_value.resolved == "New Stones"
     assert [a.resolved for a in out[0].alternatives] == ["Old Stones"]
     # ranks rebased: old entity now rank 1
-    assert bc2.value.registry.entity_rank == [1, 0]
+    assert bc2.value.registry.entity_rank.to_pylist() == [1, 0]
 
 
 def test_minhash_hot_bucket_chain_guard(spark):
