@@ -10,7 +10,8 @@ Stages (SURVEY.md §4.3):
      rewrite-same-bucket is idempotent).
   C. triples: windowed co-occurrence pairs by grouped pair expansion (one
      shuffle over the mention checkpoint, no self-join).
-  D. canonicalize + MERGE INTO the triples store (Iceberg or parquet).
+  D. canonicalize + MERGE INTO the triples store (Iceberg or parquet); the
+     first write into an absent parquet store is a single pass.
 
 Lineage: one row per bucket per stage (output rows, checksum) — written next
 to each checkpoint. ``replay_buckets`` rewrites the checkpoint partitions of
@@ -24,6 +25,7 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass, field
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -51,7 +53,7 @@ def _bucket(col: str, n: int):
     return F.pmod(F.xxhash64(col), F.lit(n)).cast("int")
 
 
-def lineage_for(df: DataFrame, stage: str, key: str = "url") -> DataFrame:
+def lineage_for(df: DataFrame, stage: str) -> DataFrame:
     """Per-bucket metrics row: counts + an order-insensitive checksum
     (sum of row hashes) for replay verification."""
     return df.groupBy("bucket").agg(
@@ -203,23 +205,30 @@ def materialize_graph_analytics(
     adjacency — as parquet under ``workdir/graph/``. The triples frame is
     persisted here because all three analytics scan it (callers pass the
     pipeline's already-materialized triples, so this persist caches a
-    parquet read, not a kernel re-extraction).
+    parquet read, not a kernel re-extraction) and released once the three
+    tables are written and counted.
 
     Returns {"paths": {name: path}, "rows": {name: count}}.
     """
     from ..operators.graph import pagerank, triangle_counts
     from ..operators.triples import entity_neighbors_topk
 
-    trip = triples.persist()
-    outputs = {
-        "pagerank": pagerank(trip, n_iter=pagerank_iters),
-        "triangles": triangle_counts(trip),
-        "neighbors": entity_neighbors_topk(trip, k=topk),
-    }
-    paths, rows = {}, {}
-    for name, df in outputs.items():
-        path = os.path.join(workdir, "graph", name)
-        df.write.mode("overwrite").parquet(path)
-        paths[name] = path
-        rows[name] = df.sparkSession.read.parquet(path).count()
+    # release only a persist made here: a frame the caller cached stays cached
+    owned = triples.storageLevel == StorageLevel.NONE
+    trip = triples.persist() if owned else triples
+    try:
+        outputs = {
+            "pagerank": pagerank(trip, n_iter=pagerank_iters),
+            "triangles": triangle_counts(trip),
+            "neighbors": entity_neighbors_topk(trip, k=topk),
+        }
+        paths, rows = {}, {}
+        for name, df in outputs.items():
+            path = os.path.join(workdir, "graph", name)
+            df.write.mode("overwrite").parquet(path)
+            paths[name] = path
+            rows[name] = df.sparkSession.read.parquet(path).count()
+    finally:
+        if owned:
+            trip.unpersist()
     return {"paths": paths, "rows": rows}

@@ -153,6 +153,12 @@ def merge_into_parquet(
     O(B/N of the table), not O(table). ``n_buckets`` is fixed at store
     creation (an ``_nbuckets_<N>`` marker wins over the parameter afterwards).
 
+    Write layout: every write is hash-partitioned on ``bucket`` (AQE sizes
+    the task count from the bytes), so each touched bucket is written by one
+    task into ONE parquet file. A merge into an absent store is a plain write
+    in a single pass; a merge into an existing store first persists the
+    updates and collects the touched buckets that prune its read.
+
     Publishing is ONE atomic ``os.rename`` of a symlink onto the target
     (see the layout note above) — the target is never absent, a torn merge
     leaves the previous version current, and :func:`_recover_symlink` repoints
@@ -175,58 +181,57 @@ def merge_into_parquet(
         stored_n = _store_n_buckets(current_version)
         if stored_n is not None:
             n_buckets = stored_n  # marker wins: bucketing is fixed at creation
-    # persist: the updates lineage (often a whole extraction pipeline in
-    # foreachBatch) is referenced by BOTH the touched-buckets collect and the
-    # merged write — without the boundary it would execute end-to-end twice
-    upd = updates.withColumn(
-        "bucket", F.pmod(F.xxhash64("subj"), F.lit(n_buckets)).cast("int")
-    ).persist()
-    touched = sorted(
-        r["bucket"] for r in upd.select("bucket").distinct().collect()
-    )  # bounded by n_buckets rows
-    if not touched and current_version is None:
-        # empty batch onto a non-existent store: publishing would create a
-        # version dir with ZERO parquet files, which every later read fails
-        # to infer a schema from — the store would be permanently poisoned
-        # (and the commit token would mark the batch done). Nothing to merge
-        # and nothing worth recording: a replay of an empty batch is a no-op.
-        upd.unpersist()
-        return True
-
-    if current_version is not None and not legacy_dir:
-        current = spark.read.parquet(current_version)
-        merged = (
-            # partition pruning: only the touched buckets' files are read
-            # (an empty batch touches nothing: every partition hard-links)
-            current.where(F.col("bucket").isin(touched) if touched else F.lit(False))
-            .unionByName(upd)
-            .groupBy("subj", "pred", "obj", "bucket")
-            .agg(
-                F.sum("weight").alias("weight"),
-                F.min("subj_rank").alias("subj_rank"),
-                F.min("obj_rank").alias("obj_rank"),
-            )
-        )
-    elif legacy_dir:  # pre-versioning store: one full rewrite migrates it
-        current = spark.read.parquet(current_version).withColumn(
-            "bucket", F.pmod(F.xxhash64("subj"), F.lit(n_buckets)).cast("int")
-        )
-        merged = (
-            current.unionByName(upd)
-            .groupBy("subj", "pred", "obj", "bucket")
-            .agg(
-                F.sum("weight").alias("weight"),
-                F.min("subj_rank").alias("subj_rank"),
-                F.min("obj_rank").alias("obj_rank"),
-            )
-        )
-        touched = list(range(n_buckets))
-    else:
-        merged = upd
-
+    bucket = F.pmod(F.xxhash64("subj"), F.lit(n_buckets)).cast("int")
+    upd = updates.withColumn("bucket", bucket)
     new_version = _next_version_path(target_path)
-    merged.write.mode("overwrite").partitionBy("bucket").parquet(new_version)
-    upd.unpersist()
+
+    if current_version is None:
+        # absent store: the merge is a plain write, one pass over the updates
+        upd.repartition("bucket").write.mode("overwrite").partitionBy(
+            "bucket"
+        ).parquet(new_version)
+        if not any(e.startswith("bucket=") for e in os.listdir(new_version)):
+            # empty batch onto a non-existent store: publishing would create a
+            # version dir with ZERO parquet files, which every later read fails
+            # to infer a schema from — the store would be permanently poisoned
+            # (and the commit token would mark the batch done). Nothing to merge
+            # and nothing worth recording: a replay of an empty batch is a no-op.
+            shutil.rmtree(new_version, ignore_errors=True)
+            return True
+    else:
+        # persist: the updates lineage (often a whole extraction pipeline in
+        # foreachBatch) is referenced by BOTH the touched-buckets collect (which
+        # prunes the read of the current version) and the merged write —
+        # without the boundary it would execute end-to-end twice
+        upd = upd.persist()
+        try:
+            touched = sorted(
+                r["bucket"] for r in upd.select("bucket").distinct().collect()
+            )  # bounded by n_buckets rows
+            current = spark.read.parquet(current_version)
+            if legacy_dir:  # pre-versioning store: one full rewrite migrates it
+                current = current.withColumn("bucket", bucket)
+            else:
+                # partition pruning: only the touched buckets' files are read
+                # (an empty batch touches nothing: every partition hard-links)
+                current = current.where(
+                    F.col("bucket").isin(touched) if touched else F.lit(False)
+                )
+            # clustered on bucket, which also satisfies the grouping below: one
+            # exchange, and each touched bucket is written by exactly one task
+            merged = (
+                current.unionByName(upd)
+                .repartition("bucket")
+                .groupBy("subj", "pred", "obj", "bucket")
+                .agg(
+                    F.sum("weight").alias("weight"),
+                    F.min("subj_rank").alias("subj_rank"),
+                    F.min("obj_rank").alias("obj_rank"),
+                )
+            )
+            merged.write.mode("overwrite").partitionBy("bucket").parquet(new_version)
+        finally:
+            upd.unpersist()
 
     # hard-link untouched partitions from the current version (same inode ->
     # byte-identical, no data copy)

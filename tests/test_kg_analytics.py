@@ -509,7 +509,19 @@ def test_materialize_graph_analytics_writes_three_tables(spark, tmp_path):
     from pyspark.sql import functions as F
 
     trip = _triples_df(spark).withColumn("pred", F.lit("co_occurs_with"))
+    jsc = spark.sparkContext._jsc
+    persisted = set(jsc.getPersistentRDDs())
     out = materialize_graph_analytics(trip, str(tmp_path), pagerank_iters=3, topk=2)
+    # nothing the call persisted outlives it (ids, not a count: the context
+    # cleaner may drop other tests' garbage-collected RDDs meanwhile)
+    assert not set(jsc.getPersistentRDDs()) - persisted
+    # a frame the caller cached stays cached
+    trip.persist()
+    try:
+        materialize_graph_analytics(trip, str(tmp_path), pagerank_iters=3, topk=2)
+        assert trip.storageLevel.useMemory
+    finally:
+        trip.unpersist()
     assert set(out["paths"]) == {"pagerank", "triangles", "neighbors"}
     assert out["rows"]["pagerank"] == 3  # a, b, c
     assert out["rows"]["triangles"] == 3

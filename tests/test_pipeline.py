@@ -59,6 +59,20 @@ def test_triples_match_kernel_oracle(spark, result):
     assert len(actual) > 0
 
 
+def test_triples_store_one_file_per_bucket(result):
+    """Stage D clusters its write on bucket: each bucket dir of the triples
+    store holds exactly one parquet file."""
+    import os
+
+    res, _docs, _ = result
+    store = os.path.realpath(res["triples_path"])
+    buckets = [e for e in os.listdir(store) if e.startswith("bucket=")]
+    assert buckets
+    for b in buckets:
+        files = [f for f in os.listdir(os.path.join(store, b)) if f.endswith(".parquet")]
+        assert len(files) == 1, (b, files)
+
+
 def test_text_byte_identical_per_url(spark, result, sf_smoke):
     _res, docs, _ = result
     raw = spark.read.parquet(f"{sf_smoke}/documents.parquet").select(

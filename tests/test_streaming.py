@@ -236,6 +236,61 @@ def test_merge_rewrites_only_touched_partitions(spark, tmp_path):
     assert os.path.islink(target)
 
 
+def test_merge_writes_one_file_per_touched_bucket(spark, tmp_path):
+    """Write layout: the merged rows are clustered on bucket before the
+    write, so each touched bucket is written by one task into one file —
+    both for the first merge (absent store) and a merge into an existing
+    store — however many partitions the updates arrive in."""
+    from gazetteer_entity_parser_spark.sources.sinks import merge_into_parquet
+
+    target = str(tmp_path / "store")
+    schema = (
+        "subj string, pred string, obj string, weight bigint, "
+        "subj_rank bigint, obj_rank bigint"
+    )
+
+    def batch(lo, hi):
+        rows = [(f"E{i}", "co_occurs_with", f"F{i}", 1, 0, 1) for i in range(lo, hi)]
+        return spark.createDataFrame(rows, schema).repartition(8)
+
+    for tok, (lo, hi) in enumerate([(0, 200), (100, 300)]):
+        df = batch(lo, hi)
+        assert df.rdd.getNumPartitions() == 8
+        assert merge_into_parquet(spark, target, df, commit_token=str(tok), n_buckets=16)
+        files = {
+            b: [f for f in names if f.endswith(".parquet")]
+            for b, names in _bucket_files(target).items()
+        }
+        assert len(files) == 16  # 200+ subjects reach every bucket
+        assert all(len(f) == 1 for f in files.values()), files
+    assert spark.read.parquet(target).count() == 300
+
+
+def test_failed_merge_releases_persisted_updates(spark, tmp_path):
+    """A batch that fails mid-merge into an existing store must not leave
+    its persisted updates behind in the (long-lived) session."""
+    import pytest as _pytest
+
+    from gazetteer_entity_parser_spark.sources.sinks import merge_into_parquet
+
+    target = str(tmp_path / "store")
+    schema = (
+        "subj string, pred string, obj string, weight bigint, "
+        "subj_rank bigint, obj_rank bigint"
+    )
+    ok = spark.createDataFrame([("A", "p", "B", 3, 0, 1)], schema)
+    assert merge_into_parquet(spark, target, ok, commit_token="0")
+
+    bad = ok.withColumn("weight", F.raise_error(F.lit("boom")).cast("bigint"))
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs())
+    with _pytest.raises(Exception, match="boom"):
+        merge_into_parquet(spark, target, bad, commit_token="1")
+    # ids, not a count: the context cleaner may drop unrelated RDDs meanwhile
+    assert not set(jsc.getPersistentRDDs()) - before
+    assert spark.read.parquet(target).collect()[0]["weight"] == 3
+
+
 def test_merge_crash_recovery_repoints_newest_version(spark, tmp_path):
     """A crash that loses the symlink (the old two-rename hazard) must be
     self-healing: the next call repoints at the newest version dir and the
@@ -359,6 +414,8 @@ def test_empty_first_merge_does_not_poison_store(spark, tmp_path):
     empty = spark.createDataFrame([], schema)
     assert merge_into_parquet(spark, target, empty, commit_token="0") is True
     assert not os.path.exists(target)  # nothing published, nothing poisoned
+    # ...and the unpublished version dir the write made is gone too
+    assert not [d for d in os.listdir(tmp_path) if d.startswith("store.v-")]
 
     batch = spark.createDataFrame([("A", "p", "B", 3, 0, 1)], schema)
     assert merge_into_parquet(spark, target, batch, commit_token="1") is True
