@@ -32,12 +32,10 @@ def _bench_sim_ann_lsh_multiprobe(spark, sf_dir):
 
 
 def _bench_build_gazetteer_distributed(spark, sf_dir):
-    """The DataFrame gazetteer build above the 100k collect cutoff (r3
-    verdict #8: previously correctness-pinned but never timed): a 150k-row
-    deterministic synthetic gazetteer through build_registry_distributed's
-    DataFrame path (small_gazetteer_rows=0 forces it). Returns a 1-row
-    frame carrying the entity count so the harness's .count() contract
-    holds."""
+    """The gazetteer build at dimension scale (r3 verdict #8): a 150k-row
+    deterministic synthetic gazetteer through build_registry_distributed.
+    Returns a 1-row frame carrying the entity count so the harness's
+    .count() contract holds."""
     from pyspark.sql import functions as F
 
     from gazetteer_entity_parser_spark.sources.builder_job import (
@@ -54,7 +52,7 @@ def _bench_build_gazetteer_distributed(spark, sf_dir):
         F.concat(F.lit("ENT_"), F.col("id")).alias("resolved_value"),
         F.col("id").alias("rank"),
     )
-    reg = build_registry_distributed(gaz, small_gazetteer_rows=0)
+    reg = build_registry_distributed(gaz)
     assert len(reg.resolved) == 150_000
     return spark.range(len(reg.resolved)).limit(1)
 
@@ -94,8 +92,8 @@ def run_bench(sf_dir: str, cpus: int, queries: list[str] | None = None) -> dict:
             "text_quality_scores",
             "text_fingerprint",
             "media_features_full",
-            "build_gazetteer_150k_distributed",  # round 4: DataFrame build
-            # path above the collect cutoff (r3 verdict #8)
+            "build_gazetteer_150k_distributed",  # round 4: 150k-row
+            # gazetteer build (r3 verdict #8)
             "kg_pagerank",  # round 5: 10-iteration fixed-point PageRank
             "kg_triangles",  # round 5: degree-oriented wedge counting
         ]

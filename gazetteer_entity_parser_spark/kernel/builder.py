@@ -166,8 +166,8 @@ def dump_parser(parser: Parser, folder: str) -> None:
     license sidecar (reference: src/parser.rs:173-199). The gazetteer rows —
     not the index — are the persisted truth; load rebuilds the index."""
     info = getattr(parser, "license_info", None)
-    if info is not None:  # validate before creating anything on disk
-        _validate_license_filename(info.filename)
+    # validate before creating anything on disk
+    license_name = _validate_license_filename(info.filename) if info is not None else None
     os.makedirs(folder, exist_ok=False)
     config = get_parser_config(parser)
     with open(os.path.join(folder, METADATA_FILENAME), "w", encoding="utf-8") as fh:
@@ -178,10 +178,8 @@ def dump_parser(parser: Parser, folder: str) -> None:
     ]
     with open(os.path.join(folder, GAZETTEER_FILENAME), "w", encoding="utf-8") as fh:
         json.dump(rows, fh)
-    info = getattr(parser, "license_info", None)
     if info is not None:
-        name = _validate_license_filename(info.filename)
-        with open(os.path.join(folder, name), "w", encoding="utf-8") as fh:
+        with open(os.path.join(folder, license_name), "w", encoding="utf-8") as fh:
             fh.write(info.content)
 
 

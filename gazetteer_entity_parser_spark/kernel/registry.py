@@ -3,9 +3,8 @@
 Pure-Python re-expression of the reference registry
 (reference: src/parser_registry.rs:10-315 and src/symbol_table.rs:9-76).
 This object is what gets *broadcast* to every Spark executor; it is built
-either from ordered ``(tokens, resolved, rank)`` rows (:meth:`Registry.extend`,
-driver side) or straight from the Arrow output of the distributed DataFrame
-build (:meth:`Registry.from_columns`, see ..sources.builder_job).
+on the driver from ordered ``(tokens, resolved, rank)`` rows by
+:meth:`Registry.extend`, its one constructor.
 
 Data layout (columns, not per-row Python objects — a broadcast registry is
 unpickled in every Python worker, where 10^5 entries as lists, tuples and
@@ -158,30 +157,6 @@ class Registry:
             token_ids = {tok: tid for tid, tok in enumerate(pylist(tokens))}
         self.token_ids = token_ids
         self.postings = _index(entity_tokens, len(tokens))
-
-    @classmethod
-    def from_columns(
-        cls,
-        tokens: pa.Array,
-        entity_offsets,
-        entity_token_ids,
-        entity_rank: pa.Array,
-        resolved: pa.Array,
-    ) -> "Registry":
-        """A registry over given columns (stop words unset): token strings in
-        id order, the entity-token CSR, ranks and resolved strings in entity
-        id order."""
-        reg = cls()
-        reg._install(
-            tokens.cast(pa.string()),
-            Csr(
-                np.asarray(entity_offsets, np.int32),
-                np.asarray(entity_token_ids, np.int32),
-            ),
-            entity_rank.cast(pa.int64()),
-            resolved.cast(pa.string()),
-        )
-        return reg
 
     def __getstate__(self):
         # token_ids and postings are derived: shipping them would cost more

@@ -1,8 +1,18 @@
-"""Distributed parser build: gazetteer DataFrame -> Registry -> broadcast.
+"""Parser build: gazetteer DataFrame -> Registry -> broadcast.
 
-Re-expresses the reference's offline build (reference:
-src/parser_builder.rs:82-101 + src/parser_registry.rs:38-65, 118-167) as
-DataFrame jobs, per SURVEY.md §2.1:
+The registry (:func:`build_registry_distributed`) is one Arrow collect of
+the gazetteer, sorted into entity-id order, plus the kernel's bulk build
+``Registry.extend`` — the reference's offline build over ordered rows
+(reference: src/parser_builder.rs:82-101 + src/parser_registry.rs:38-65).
+The registry is a broadcast dimension: it has to fit the driver and every
+executor whole, so indexing it with Spark jobs would only ship the result
+back to the driver.
+
+:func:`build_index_frames`, :func:`stop_words_df` and :func:`edge_cases_df`
+express the same build as DataFrames, per SURVEY.md §2.1. They back the
+``kg_token_doc_frequency``, ``kg_stop_words_topn`` and ``kg_edge_cases``
+queries, each checked against a DuckDB oracle, and tests pin them to the
+kernel's registry:
 
 - rank assignment: explicit ``rank`` column (DataFrames have no row order);
 - tokenization: Arrow-batched pandas UDF around the kernel tokenizer (exact
@@ -11,31 +21,23 @@ DataFrame jobs, per SURVEY.md §2.1:
 - token interning: first-appearance order over (rank, position) — matches
   the reference's BTreeMap+counter interning scan order
   (reference: src/symbol_table.rs:17-27);
-- inverted index: ``groupBy(token).agg(sort_array(collect_set(entity)))``;
 - stop words: top-n by distinct-entity count, ties to the earlier-interned
   token (Rust stable sort, reference: src/parser_registry.rs:141-157);
 - edge cases: entities whose token set ⊆ stop words
   (reference: src/parser_registry.rs:159-166).
 
-The assembled ``Registry`` is verified equal to the kernel's driver-side
-build in tests, then shipped to executors with ``SparkContext.broadcast``.
-
-Scale note: the gazetteer is dimension-scale (≤ tens of millions of rows ≪
-the 10^12-doc corpus). The two groupBys shuffle only gazetteer tokens; id
-assignment uses a single-partition window over *distinct tokens / entities*
-only, which is the standard dimension-build trade-off. The corpus-side scan
-never shuffles on gazetteer keys — the index travels as a broadcast.
+The built parser ships to executors with ``SparkContext.broadcast``; the
+corpus-side scan never shuffles on gazetteer keys.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..kernel.registry import Registry
+from ..kernel.registry import Registry, pylist
 from ..kernel.parser import Parser
 from ..kernel.tokenizer import tokens_only
 
@@ -63,7 +65,6 @@ def build_index_frames(gazetteer_df: DataFrame) -> dict[str, DataFrame]:
     Returns dict with:
       entities:  entity_id, resolved_value, rank, tokens array<string>
       tokens:    token, token_id (first-appearance interning order)
-      postings:  token_id, entity_ids array<bigint> (sorted)
       token_df:  token, n_entities (distinct-entity frequency)
     """
     # entity id = position in rank order (reference interning order,
@@ -96,20 +97,13 @@ def build_index_frames(gazetteer_df: DataFrame) -> dict[str, DataFrame]:
         "token_id", F.row_number().over(w_intern) - F.lit(1)
     ).select("token", "token_id")
 
-    with_ids = exploded.join(tokens, "token")
-
-    postings = with_ids.groupBy("token_id").agg(
-        F.sort_array(F.collect_set("entity_id")).alias("entity_ids")
-    )
-
-    token_df = with_ids.groupBy("token", "token_id").agg(
+    token_df = exploded.join(tokens, "token").groupBy("token", "token_id").agg(
         F.countDistinct("entity_id").alias("n_entities")
     )
 
     return {
         "entities": entities,
         "tokens": tokens,
-        "postings": postings,
         "token_df": token_df,
     }
 
@@ -137,93 +131,40 @@ def edge_cases_df(frames: dict[str, DataFrame], stop_words: DataFrame) -> DataFr
     )
 
 
-# below this, one collect + the sequential kernel build beats ~6 Spark jobs
-# of window/UDF overhead; above it, the DataFrame build amortizes
-SMALL_GAZETTEER_ROWS = 100_000
-
-
 def build_registry_distributed(
     gazetteer_df: DataFrame,
     n_stop_words: int = 0,
     additional_stop_words: list[str] | None = None,
-    small_gazetteer_rows: int = SMALL_GAZETTEER_ROWS,
 ) -> Registry:
-    """Run the DataFrame build and assemble the (small) Registry on the
-    driver. Must be bit-identical to the kernel's sequential build — pinned
-    by tests/test_builder_job.py.
+    """Collect the gazetteer once (Arrow) and index it on the driver with the
+    kernel's sequential build — the reference's plan over ordered rows
+    (src/parser_builder.rs:90-105). Must be bit-identical to
+    ``ParserBuilder.build`` — pinned by tests/test_builder_job.py.
 
-    Dimension-scale fast path: a gazetteer under ``small_gazetteer_rows`` is
-    collected once and indexed by the sequential kernel build (the exact
-    plan the reference uses, src/parser_builder.rs:90-105) — spending six
-    Spark jobs of window/UDF fixed overhead to index a broadcast-sized
-    dimension is the wrong physical plan. The DataFrame build below remains
-    the path for 10^5+-row gazetteers; equality of the two is pinned in
-    tests (pass ``small_gazetteer_rows=0`` to force the DataFrame path)."""
-    if small_gazetteer_rows > 0:
-        probe = (
-            gazetteer_df.select("raw_value", "resolved_value", "rank")
-            .limit(small_gazetteer_rows + 1)
-            .collect()
+    The registry is broadcast whole, so it has to fit the driver anyway; a
+    distributed build would only ship its output back here. Entity ids follow
+    the total order (rank, resolved_value, raw_value) of
+    :func:`build_index_frames`' entity-id window, NULLs first as in a Spark
+    ascending sort, so duplicate user-supplied ranks still give
+    deterministic ids (same-span tie-breaks, lineage checksums). NULL and
+    whitespace-only raw values tokenize to ``[]``, which ``extend`` skips
+    (src/parser_registry.rs:39-41)."""
+    tbl = (
+        gazetteer_df.select("raw_value", "resolved_value", "rank")
+        .toArrow()
+        .sort_by(
+            [(c, "ascending") for c in ("rank", "resolved_value", "raw_value")],
+            null_placement="at_start",
         )
-        if len(probe) <= small_gazetteer_rows:
-            # mirror the DataFrame path exactly: NULL/whitespace-only
-            # raw_value rows tokenize to [] and are filtered there
-            # (F.size(tokens) > 0) — without this the probe path crashed on
-            # inputs the big path silently accepts
-            probe = [r for r in probe if r["raw_value"] and tokens_only(r["raw_value"])]
-            # same total order as build_index_frames' entity-id window
-            # (Spark asc = NULLS FIRST, hence null-safe keys for BOTH
-            # nullable columns — a NULL rank must sort first, not raise)
-            probe.sort(
-                key=lambda r: (
-                    (r["rank"] is not None, r["rank"] if r["rank"] is not None else 0),
-                    (r["resolved_value"] is not None, r["resolved_value"] or ""),
-                    r["raw_value"],
-                )
-            )
-            reg = Registry()
-            reg.extend(
-                (tokens_only(r["raw_value"]), r["resolved_value"], r["rank"])
-                for r in probe
-            )
-            reg.set_stop_words(n_stop_words, additional_stop_words)
-            return reg
-
-    frames = build_index_frames(gazetteer_df)
-
-    # r6: persist the entities frame — BOTH driver reads below (and the
-    # token-interning branch) otherwise re-execute the tokenize-UDF +
-    # global-rank-window lineage from scratch (measured: the 150k-row bench
-    # build ran it 4x); one materialization feeds every consumer, and the
-    # boundary is dropped before returning
-    entities = frames["entities"].persist()
-    try:
-        # Arrow transfer instead of row-by-row collect(): the two reads move
-        # ~300k rows of strings/arrays to the driver, where the pickled-row
-        # path was ~2x the remaining build cost
-        ent_tbl = (
-            entities.orderBy("entity_id")
-            .select("resolved_value", "rank", "tokens")
-            .toArrow()
+    )
+    reg = Registry()
+    reg.extend(
+        zip(
+            [tokens_only(raw) if raw is not None else [] for raw in pylist(tbl["raw_value"])],
+            pylist(tbl["resolved_value"]),
+            pylist(tbl["rank"]),
         )
-        tokens = (
-            frames["tokens"].orderBy("token_id").select("token").toArrow()
-            .column("token").combine_chunks()
-        )
-        # token ids are row positions (first-appearance order == kernel
-        # interning order), so the entity-token CSR is the tokens list
-        # column with each string replaced by its row in ``tokens``
-        lists = ent_tbl.column("tokens").combine_chunks()
-        offsets = lists.offsets.to_numpy()
-        reg = Registry.from_columns(
-            tokens,
-            offsets - offsets[0],
-            pc.index_in(lists.flatten(), value_set=tokens).to_numpy(),
-            ent_tbl.column("rank").combine_chunks(),
-            ent_tbl.column("resolved_value").combine_chunks(),
-        )
-    finally:
-        entities.unpersist()
+    )
     reg.set_stop_words(n_stop_words, additional_stop_words)
     return reg
 
