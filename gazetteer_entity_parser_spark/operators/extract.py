@@ -31,6 +31,7 @@ from pyspark.sql import types as T
 
 from ..kernel.parser import Parser
 from ..kernel.tokenizer import tokenize
+from .triples import merge_canonical_triples
 
 MENTIONS_SCHEMA = T.StructType(
     [
@@ -228,11 +229,11 @@ def extract_triple_partials(
     of ~|mention pairs| raw rows. The only shuffle left in the whole
     mentions->canonical-triples path is the final (subj, pred, obj) rollup
     over tiny partials — at 10^12 documents this removes the 10^13-row pair
-    shuffle entirely. Canonical equality with the unfused path is pinned in
-    tests/test_triples_grouped.py.
+    shuffle entirely. Canonical equality with the grouped pair expansion is
+    pinned in tests/test_triples_grouped.py.
 
-    Use the unfused operators when the raw triple table (url/sent_idx
-    provenance) must be materialized.
+    Use ``triples.cooccurrence_triples_grouped`` over extracted mentions when
+    the raw triple table (url/sent_idx provenance) must be materialized.
     """
     pruned = docs.select(F.col(key_col).alias("url"), F.col(text_col).alias("text"))
     if num_partitions:
@@ -284,9 +285,6 @@ def canonical_triples_fused(
     docs: DataFrame, parser_broadcast, **kwargs
 ) -> DataFrame:
     """Final rollup over the fused partials — one small shuffle total."""
-    partials = extract_triple_partials(docs, parser_broadcast, **kwargs)
-    return partials.groupBy("subj", "pred", "obj").agg(
-        F.sum("weight").alias("weight"),
-        F.min("subj_rank").alias("subj_rank"),
-        F.min("obj_rank").alias("obj_rank"),
+    return merge_canonical_triples(
+        extract_triple_partials(docs, parser_broadcast, **kwargs)
     )

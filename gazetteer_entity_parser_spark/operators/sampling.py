@@ -202,16 +202,23 @@ def pack_sequences(
     )
 
 
+def sample_key_sql(key_sql: str = "doc_id", seed: int = 0) -> str:
+    """The DuckDB-portable form of :func:`_hash_prefix` over one key
+    column: ``substring(md5(seed || US || key), 1, 16)``. The oracles build
+    every hash-sampling, split and packing decision from it."""
+    return (
+        f"substring(md5('{int(seed)}' || chr(31) || CAST({key_sql} AS VARCHAR)), "
+        f"1, {_HEX_DIGITS})"
+    )
+
+
 def sample_sql(
     fraction: float, key_sql: str = "doc_id", seed: int = 0
 ) -> str:
     """The DuckDB-portable predicate equivalent to :func:`sample_hash` —
     exposed so oracles (and any other engine) replay the identical
     decision: ``substring(md5(...), 1, 16) < '<threshold>'``."""
-    return (
-        f"substring(md5('{int(seed)}' || chr(31) || CAST({key_sql} AS VARCHAR)), "
-        f"1, {_HEX_DIGITS}) < '{_hex_threshold(fraction)}'"
-    )
+    return f"{sample_key_sql(key_sql, seed)} < '{_hex_threshold(fraction)}'"
 
 
 def negative_triples(

@@ -1,10 +1,12 @@
 """Stage C/D: triple assembly and canonicalization (north_rule additions —
 the reference stops at mentions; SURVEY.md §4.3 Stages C-D).
 
-- co-occurrence: mentions self-join within (url, sent_idx) windows; subj is
-  the earlier mention. Equi-join on the composite window key + theta residual
-  ``tok_idx <`` — Catalyst plans a shuffled hash join on (url, sent_idx);
-  pair blowup is bounded by the window size chosen at extraction.
+- co-occurrence: every ordered pair of mentions within one (url, sent_idx)
+  window; subj is the earlier mention. One shuffle groups each window's
+  mentions, and the pairs are expanded in-partition; pair blowup is bounded
+  by the window size chosen at extraction. Canonical triples skip this
+  operator: ``extract.extract_triple_partials`` expands and pre-aggregates
+  the pairs inside the extraction UDF.
 - canonicalization: aliases already resolve to their canonical value inside
   the kernel (reference: src/parser_registry.rs:175-192); the groupBy merges
   duplicate alias-level triples, keeps the most popular (min-rank) witness
@@ -21,44 +23,14 @@ from pyspark.sql import functions as F
 
 CO_OCCURS = "co_occurs_with"
 
-TRIPLES_SCHEMA = (
-    "subj string, pred string, obj string, url string, sent_idx int, "
-    "subj_rank int, obj_rank int"
-)
-
-
-def cooccurrence_triples(mentions: DataFrame, pred: str = CO_OCCURS) -> DataFrame:
-    """All ordered within-window mention pairs -> raw triples."""
-    m1 = mentions.select("url", "sent_idx", "tok_idx", "resolved", "rank")
-    m2 = (
-        mentions.select("url", "sent_idx", "tok_idx", "resolved", "rank")
-        .withColumnRenamed("tok_idx", "tok_idx2")
-        .withColumnRenamed("resolved", "resolved2")
-        .withColumnRenamed("rank", "rank2")
-    )
-    return (
-        m1.join(m2, ["url", "sent_idx"])
-        .where(F.col("tok_idx") < F.col("tok_idx2"))
-        .select(
-            F.col("resolved").alias("subj"),
-            F.lit(pred).alias("pred"),
-            F.col("resolved2").alias("obj"),
-            "url",
-            "sent_idx",
-            F.col("rank").alias("subj_rank"),
-            F.col("rank2").alias("obj_rank"),
-        )
-    )
-
-
 def cooccurrence_triples_grouped(mentions: DataFrame, pred: str = CO_OCCURS) -> DataFrame:
-    """Same output as :func:`cooccurrence_triples`, better physical plan:
-    ONE shuffle (groupBy window) + in-partition pair expansion, instead of a
-    self-join that shuffles the mention stream twice and re-executes its
-    lineage for both sides. Windows are token-bounded at extraction, so the
-    per-group pair blowup is O(window^2) local work — the right trade at
-    10^12 documents. Equality with the join formulation is pinned in tests
-    and by the shared DuckDB oracle."""
+    """All ordered within-window mention pairs -> raw triples with
+    (url, sent_idx) provenance. ONE shuffle (groupBy window) + in-partition
+    pair expansion: the mention stream is shuffled once and its lineage runs
+    once. Windows are token-bounded at extraction, so the per-group pair
+    blowup is O(window^2) local work — the right trade at 10^12 documents.
+    Pinned against a pure-Python pair oracle in tests and by the
+    ``kg_triples_raw`` DuckDB oracle."""
     ms = F.array_sort(F.collect_list(F.struct("tok_idx", "resolved", "rank")))
     pairs = F.flatten(
         F.transform(
@@ -98,28 +70,6 @@ def canonicalize_triples(raw_triples: DataFrame) -> DataFrame:
         F.min("subj_rank").alias("subj_rank"),
         F.min("obj_rank").alias("obj_rank"),
     )
-
-
-def triples_with_salted_agg(raw_triples: DataFrame, salt_buckets: int = 16) -> DataFrame:
-    """Two-phase salted aggregation for extreme key skew (SURVEY.md §4.3
-    Stage C): partial per (salt, key) then final per key. Semantically equal
-    to :func:`canonicalize_triples`; use when one entity dominates the corpus
-    and AQE alone can't split the hash-agg exchange."""
-    salted = raw_triples.withColumn(
-        "_salt", F.pmod(F.xxhash64("url", "sent_idx"), F.lit(salt_buckets))
-    )
-    partial = salted.groupBy("_salt", "subj", "pred", "obj").agg(
-        F.count("*").alias("w"),
-        F.min("subj_rank").alias("sr"),
-        F.min("obj_rank").alias("or_"),
-    )
-    return partial.groupBy("subj", "pred", "obj").agg(
-        F.sum("w").alias("weight"),
-        F.min("sr").alias("subj_rank"),
-        F.min("or_").alias("obj_rank"),
-    )
-
-
 
 
 def merge_canonical_triples(*parts: DataFrame) -> DataFrame:

@@ -9,7 +9,7 @@ Stages (SURVEY.md §4.3):
      so any bucket replays independently (kernel is deterministic =>
      rewrite-same-bucket is idempotent).
   C. triples: windowed co-occurrence pairs by grouped pair expansion (one
-     shuffle over the mention checkpoint, no self-join).
+     shuffle over the mention checkpoint).
   D. canonicalize + MERGE INTO the triples store (Iceberg or parquet); the
      first write into an absent parquet store is a single pass.
 

@@ -16,14 +16,15 @@ sorted column name).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.extract import extract_mentions
+from ..operators.sampling import _hex_threshold, sample_key_sql
 from ..operators.triples import (
     canonicalize_triples,
-    cooccurrence_triples,
     cooccurrence_triples_grouped,
+    merge_canonical_triples,
 )
 from ..sources.builder_job import (
     build_index_frames,
@@ -93,9 +94,13 @@ def _parser_cache(spark: SparkSession, sf_dir: str, which: str):
     return bc
 
 
-def _mentions(spark: SparkSession, sf_dir: str, which: str = "vocab") -> DataFrame:
+def _mentions(
+    spark: SparkSession, sf_dir: str, which: str = "vocab", where: Column | None = None
+) -> DataFrame:
     bc = _parser_cache(spark, sf_dir, which)
     pages = webpages_from_documents(_docs(spark, sf_dir))
+    if where is not None:
+        pages = pages.where(where)
     # partitioning comes from _docs' spread; extract's own salted
     # num_partitions stays the production knob for skewed corpora
     return extract_mentions(
@@ -189,14 +194,9 @@ def q_kg_mentions(spark, sf_dir):
 
 
 def q_kg_triples_raw(spark, sf_dir):
-    # This query deliberately exercises the self-join pair-expansion shape
-    # (the grouped single-shuffle variant is registered as
-    # kg_triples_canonical). Persist the mentions frame first so both join
-    # sides read one InMemoryTableScan instead of re-executing the kernel
-    # extraction lineage twice (r4 verdict item #2; CacheManager dedupes the
-    # entry across repeated runs by canonicalized plan).
-    mentions = _mentions(spark, sf_dir, "vocab").persist()
-    return cooccurrence_triples(mentions).select(
+    # grouped pair expansion: one extraction, one shuffle on the window key,
+    # no join and nothing persisted
+    return cooccurrence_triples_grouped(_mentions(spark, sf_dir, "vocab")).select(
         "subj", "pred", "obj", "url", "sent_idx",
         F.col("subj_rank").cast("bigint").alias("subj_rank"),
         F.col("obj_rank").cast("bigint").alias("obj_rank"),
@@ -209,7 +209,7 @@ def q_kg_triples_canonical(spark, sf_dir):
     # the only shuffle is the final (subj, pred, obj) rollup. Row-identical
     # to the grouped-pair-expansion shape (tests/test_triples_grouped.py::
     # test_fused_equals_unfused_canonical) and to this query's unchanged
-    # DuckDB oracle; the grouped/join shapes remain exercised by
+    # DuckDB oracle; the grouped pair expansion stays exercised by
     # kg_triples_raw and kg_incremental_merge.
     return _canonical_triples_fused(spark, sf_dir).select(
         "subj", "pred", "obj",
@@ -237,14 +237,12 @@ def q_kg_incremental_merge(spark, sf_dir):
     split-merge is bit-identical to a from-scratch rebuild, which is the
     resumability/batch-append guarantee the north rule asks for. The
     split key (crc32 parity of url) is arbitrary by construction: the
-    identity holds for ANY disjoint partition."""
-    from ..operators.triples import merge_canonical_triples
-
-    mentions = _mentions(spark, sf_dir, "vocab").persist()
+    identity holds for ANY disjoint partition. The pages are split before
+    extraction, so each half is extracted once and nothing is persisted."""
     half = F.pmod(F.crc32(F.col("url")), F.lit(2))
     parts = [
         canonicalize_triples(
-            cooccurrence_triples_grouped(mentions.where(half == i))
+            cooccurrence_triples_grouped(_mentions(spark, sf_dir, "vocab", half == i))
         )
         for i in (0, 1)
     ]
@@ -2025,9 +2023,7 @@ def _sampling_oracles() -> None:
     the SAME float accumulation the Spark operators use — 0.1 + 0.8 is
     0.9000000000000001 in IEEE, so an independently hand-written '0.9'
     threshold would disagree in the last hex digits."""
-    from ..operators.sampling import _hex_threshold
-
-    u = "substring(md5('7' || chr(31) || CAST(doc_id AS VARCHAR)), 1, 16)"
+    u = sample_key_sql(seed=7)
     rates = {"src0": 1.0, "src1": 0.5, "src2": 0.25}
     cases = " ".join(
         f"WHEN '{k}' THEN '{_hex_threshold(v)}'" for k, v in sorted(rates.items())
@@ -2508,9 +2504,7 @@ def _pipeline_pretrain_oracle() -> None:
     min-id) -> NOT EXISTS shared-13-gram with the eval slice -> stratified
     sample CASE -> split CASE; thresholds from the SAME _hex_threshold and
     float accumulation as the Spark operators (see _sampling_oracles)."""
-    from ..operators.sampling import _hex_threshold
-
-    u = "substring(md5('7' || chr(31) || CAST(doc_id AS VARCHAR)), 1, 16)"
+    u = sample_key_sql(seed=7)
     rates = {"src0": 1.0, "src1": 0.5}
     rate_cases = " ".join(
         f"WHEN '{k}' THEN '{_hex_threshold(v)}'" for k, v in sorted(rates.items())
@@ -2549,10 +2543,10 @@ _pipeline_pretrain_oracle()
 
 # sequence packing: same hash order (md5 prefix + id tiebreak), same shard
 # prefix, same running-sum pack rule — one window, directly SQL-expressible
-ORACLES["pack_sequences"] = """
+ORACLES["pack_sequences"] = f"""
     WITH t AS (
         SELECT doc_id,
-               substring(md5('7' || chr(31) || CAST(doc_id AS VARCHAR)), 1, 16) AS h,
+               {sample_key_sql(seed=7)} AS h,
                CAST(COALESCE(len(list_filter(regexp_split_to_array(text, '\\s+'),
                     x -> x <> '')), 0) AS INT) AS n_tokens
         FROM documents

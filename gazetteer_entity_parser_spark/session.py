@@ -1,8 +1,8 @@
 """SparkSession factory tuned for the KG-construction pipeline.
 
 Defaults chosen for the 100 TB design point, scaled down to local mode:
-- AQE on (runtime coalescing + skew-join splitting — our Stage-C mention
-  self-join has a popularity long tail);
+- AQE on (runtime coalescing + skew splitting — Stage C's window-keyed
+  mention shuffle and triple rollup have a popularity long tail);
 - Arrow transfer on for every pandas/Arrow UDF stage (the matching kernel
   moves through ``mapInPandas``; Arrow batch size capped so giant web pages
   don't blow the Python worker);

@@ -50,14 +50,6 @@ def tokenize_udf(raw: pd.Series) -> pd.Series:
     return raw.map(lambda s: tokens_only(s) if s is not None else [])
 
 
-def with_rank_from_order(df: DataFrame, order_col: str = "popularity") -> DataFrame:
-    """Materialize the reference's implicit list-position rank
-    (reference: src/parser_builder.rs:90-92) from an explicit ordering
-    column. Single-partition window — dimension-scale only."""
-    w = Window.orderBy(F.col(order_col).asc())
-    return df.withColumn("rank", F.row_number().over(w) - F.lit(1))
-
-
 def build_index_frames(gazetteer_df: DataFrame) -> dict[str, DataFrame]:
     """The build expressed as reusable DataFrames (each also exposed as a
     driver-contract query with a DuckDB oracle — see __spark_entry__).
@@ -208,16 +200,3 @@ def prepend_and_rebroadcast(
     parser.prepend_values(new_values)  # invalidates the parser's run caches
     old_broadcast.unpersist()
     return spark.sparkContext.broadcast(parser)
-
-
-def inject_and_rebroadcast(
-    spark: SparkSession,
-    old_broadcast,
-    new_values: list[tuple[str, str]],
-    prepend: bool,
-    from_vanilla: bool,
-):
-    """Injection as broadcast-rebuild (reference: src/parser.rs:156-168)."""
-    new_parser = old_broadcast.value.inject_new_values(new_values, prepend, from_vanilla)
-    old_broadcast.unpersist()
-    return spark.sparkContext.broadcast(new_parser)

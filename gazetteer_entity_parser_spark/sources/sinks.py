@@ -335,34 +335,3 @@ def merge_into(
         return "iceberg"
     merge_into_parquet(spark, target, updates, commit_token=commit_token, n_buckets=n_buckets)
     return "parquet"
-
-
-def write_bucketed(
-    spark: SparkSession,
-    df: DataFrame,
-    table: str,
-    bucket_cols: list[str],
-    n_buckets: int = 16,
-    sort_cols: list[str] | None = None,
-) -> None:
-    """Persist a table bucketed (and optionally sorted) on its join key so
-    later equi-joins between tables bucketed the same way are CO-LOCATED —
-    no Exchange on either side (verified by plan assertion in
-    tests/test_bucketing.py). This is the steady-state layout for the hot
-    join keys at corpus scale: mentions and triples bucketed by entity so
-    repeated enrichment/rollup joins never reshuffle the big table.
-
-    Spark bucketing requires a managed/external table (saveAsTable), not a
-    bare parquet path — bucket metadata lives in the catalog."""
-    writer = df.write.mode("overwrite").bucketBy(n_buckets, *bucket_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.format("parquet").saveAsTable(table)
-
-
-def bucketed_join_plan_has_no_exchange(spark: SparkSession, left: str, right: str, on: list[str]) -> bool:
-    """True iff joining the two bucketed tables on their bucket key produces
-    a shuffle-free plan (the co-location check, usable as a runtime guard)."""
-    joined = spark.table(left).join(spark.table(right), on)
-    plan = joined._jdf.queryExecution().executedPlan().toString()
-    return "Exchange" not in plan

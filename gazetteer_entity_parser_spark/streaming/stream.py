@@ -6,16 +6,11 @@ parser + ``mapInPandas`` stage runs unchanged under ``readStream``; late
 data needs no special handling for extraction itself. Aggregated triples use
 ``foreachBatch`` + MERGE so each micro-batch upserts idempotently — the
 streaming twin of the batch Stage D.
-
-For event-time windowed rollups (mentions/minute with late data), see
-:func:`mention_rate_per_window` — watermarked sliding windows over the
-mention stream.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..operators.extract import extract_mentions
 from ..operators.triples import canonicalize_triples, cooccurrence_triples_grouped
@@ -31,12 +26,6 @@ def read_webpage_stream(spark: SparkSession, input_dir: str, max_files: int = 4)
         .option("maxFilesPerTrigger", max_files)
         .parquet(input_dir)
     )
-
-
-def streaming_mentions(pages: DataFrame, parser_broadcast, **extract_kwargs) -> DataFrame:
-    """The batch extraction operator applied to a streaming DataFrame —
-    mapInPandas is fully streaming-compatible for stateless stages."""
-    return extract_mentions(pages, parser_broadcast, **extract_kwargs)
 
 
 def start_triples_stream(
@@ -58,10 +47,9 @@ def start_triples_stream(
     Plan shape per batch: the mention UDF projects ONLY the five columns the
     triples rollup needs (Catalyst cannot prune through mapInPandas — the
     full-width stream paid matched_value slicing + alternatives + extra
-    Arrow transfer per batch), and the pair expansion is the GROUPED
-    formulation (one shuffle; the self-join re-executed the extraction
-    lineage once per join side)."""
-    mentions = streaming_mentions(
+    Arrow transfer per batch), and the pair expansion is the grouped one
+    (one shuffle on the window key)."""
+    mentions = extract_mentions(
         pages_stream,
         parser_broadcast,
         window_tokens=window_tokens,
@@ -78,126 +66,3 @@ def start_triples_stream(
         .trigger(availableNow=True)
         .start()
     )
-
-
-def running_entity_totals(
-    mentions_stream: DataFrame,
-    checkpoint_dir: str,
-    output_path: str,
-):
-    """Custom stateful streaming operator via ``applyInPandasWithState``:
-    per resolved entity, a running (n_mentions, n_docs-ish) total maintained
-    in explicit state across micro-batches — the pattern for stateful logic
-    that watermarked aggregation can't express (e.g. monotone counters with
-    custom eviction). Emits one updated row per entity per batch.
-
-    State: (count: long, last_url: string). GroupStateTimeout: none — totals
-    are permanent for the run.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType(
-        [
-            T.StructField("resolved", T.StringType()),
-            T.StructField("n_mentions", T.LongType()),
-        ]
-    )
-    state_schema = T.StructType([T.StructField("count", T.LongType())])
-
-    def update(key, pdfs, state: GroupState):
-        total = state.get[0] if state.exists else 0
-        for pdf in pdfs:
-            total += len(pdf)
-        state.update((total,))
-        yield pd.DataFrame({"resolved": [key[0]], "n_mentions": [total]})
-
-    updates = mentions_stream.groupBy("resolved").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # update-mode stream: append update rows; the latest total per entity
-        # is max(n_mentions) since totals are monotone
-        batch_df.write.mode("append").parquet(output_path)
-
-    return (
-        updates.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def mention_rate_per_window(
-    mentions_with_ts: DataFrame,
-    window: str = "10 minutes",
-    slide: str = "5 minutes",
-    watermark: str = "15 minutes",
-) -> DataFrame:
-    """Event-time windowed mention counts with a watermark for late data —
-    the standard streaming-agg shape (stateful, state bounded by watermark)."""
-    return (
-        mentions_with_ts.withWatermark("warc_ts", watermark)
-        .groupBy(F.window("warc_ts", window, slide), F.col("resolved"))
-        .agg(F.count("*").alias("n_mentions"))
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            "resolved",
-            "n_mentions",
-        )
-    )
-
-
-def streaming_dedup_exact(
-    pages: DataFrame,
-    content_cols: tuple[str, ...] = ("text",),
-    event_time_col: str | None = None,
-    watermark: str | None = None,
-) -> DataFrame:
-    """Streaming exact deduplication: keep the FIRST occurrence of each
-    distinct content digest across micro-batches, via Spark's built-in
-    stateful dropDuplicates — the streaming counterpart of
-    :func:`..operators.dedup.exact_duplicates`'s keeper selection, for
-    ingest-time dedup (a re-crawled page is dropped the moment it arrives
-    instead of by a later batch job).
-
-    Scale shape: state is ONE sha2-256 digest row per distinct document,
-    hash-partitioned across executors by the state store (the full corpus
-    bytes never enter state), and lookups ride the digest shuffle the
-    operator needs anyway. Unbounded-state caveat: without a watermark the
-    state grows with |distinct docs| forever; pass ``event_time_col`` +
-    ``watermark`` to switch to ``dropDuplicatesWithinWatermark`` (Spark 3.5+)
-    which evicts digests older than the watermark — the right mode when
-    re-crawls cluster in time. Digest collisions: sha2-256, negligible.
-
-    The digest input is the JSON encoding of the content struct (nulls
-    kept) rather than a separator-joined concat: concat_ws SKIPS null
-    columns, so (NULL, 'foo') vs ('foo', NULL) — or a null text vs an
-    empty text — would collide and silently drop a distinct document; JSON
-    escaping also disambiguates content containing the separator byte.
-    """
-    digest = F.sha2(
-        F.to_json(
-            F.struct(*[F.col(c) for c in content_cols]),
-            {"ignoreNullFields": "false"},
-        ),
-        256,
-    ).alias("_digest")
-    out = pages.select("*", digest)
-    if watermark is not None:
-        if event_time_col is None:
-            raise ValueError("watermark requires event_time_col")
-        return (
-            out.withWatermark(event_time_col, watermark)
-            .dropDuplicatesWithinWatermark(["_digest"])
-            .drop("_digest")
-        )
-    return out.dropDuplicates(["_digest"]).drop("_digest")

@@ -1,6 +1,8 @@
 """Mirror of the driver's correctness gate: every oracle-backed query must
 match DuckDB row-for-row (order-insensitive) on the same parquet tables."""
 
+import hashlib
+import json
 import math
 
 import duckdb
@@ -62,3 +64,12 @@ def test_all_queries_run_and_return_rows(spark):
     for name, fn in QUERIES.items():
         n = fn(spark, SF).count()
         assert n > 0, f"{name} returned 0 rows"
+
+
+def test_oracle_sql_is_pinned():
+    """The 81 oracles are the correctness contract, so their SQL must stay
+    byte-identical. A deliberate oracle change updates this digest and
+    records why in CHANGES.md."""
+    assert len(ORACLES) == 81
+    digest = hashlib.sha256(json.dumps(ORACLES, sort_keys=True).encode()).hexdigest()
+    assert digest == "3ee619b78bcf4d82821bd58042ed732d3a846d8eaaedcccf6a97a452e9fe6626"

@@ -1,15 +1,12 @@
-"""Streaming pipeline: availableNow stream over the same pages must produce
-the same canonical triples as the batch pipeline, and the windowed mention
-rollup must respect watermark semantics."""
+"""Streaming pipeline: an availableNow stream over the same pages must
+produce the same canonical triples as pair expansion over the batch
+mentions, and the parquet store's merge must be idempotent, bucket-local
+and crash-safe."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from gazetteer_entity_parser_spark.operators.extract import extract_mentions
-from gazetteer_entity_parser_spark.operators.triples import (
-    canonicalize_triples,
-    cooccurrence_triples,
-)
 from gazetteer_entity_parser_spark.plans.pipeline import docs_from_sf_dir
 from gazetteer_entity_parser_spark.sources.builder_job import (
     broadcast_parser,
@@ -17,7 +14,6 @@ from gazetteer_entity_parser_spark.sources.builder_job import (
 )
 from gazetteer_entity_parser_spark.sources.gazetteer import vocabulary_gazetteer
 from gazetteer_entity_parser_spark.streaming.stream import (
-    mention_rate_per_window,
     read_webpage_stream,
     start_triples_stream,
 )
@@ -36,7 +32,14 @@ def parser_bc(spark, pages):
     return broadcast_parser(spark, build_parser_distributed(gaz, threshold=1.0))
 
 
-def test_stream_equals_batch(spark, pages, parser_bc, tmp_path):
+def _batch_weights(pages, parser_bc, pair_oracle) -> dict:
+    """{(subj, obj): weight} by the pure-Python pair oracle over the batch
+    extraction of the same pages."""
+    mentions = extract_mentions(pages, parser_bc, window_tokens=10).collect()
+    return {(t[0], t[2]): t[3] for t in pair_oracle(mentions, canonical=True)}
+
+
+def test_stream_equals_batch(spark, pages, parser_bc, pair_oracle, tmp_path):
     input_dir = str(tmp_path / "pages_in")
     # several files so maxFilesPerTrigger yields multiple micro-batches
     pages.repartition(5).write.parquet(input_dir)
@@ -51,52 +54,9 @@ def test_stream_equals_batch(spark, pages, parser_bc, tmp_path):
         (r["subj"], r["obj"]): r["weight"]
         for r in spark.read.parquet(triples_path).collect()
     }
-    batch = {
-        (r["subj"], r["obj"]): r["weight"]
-        for r in canonicalize_triples(
-            cooccurrence_triples(extract_mentions(pages, parser_bc, window_tokens=10))
-        ).collect()
-    }
+    batch = _batch_weights(pages, parser_bc, pair_oracle)
     # micro-batch boundaries never split a document, so the merged totals match
     assert streamed == batch
-
-
-def test_stateful_running_totals(spark, pages, parser_bc, tmp_path):
-    from gazetteer_entity_parser_spark.streaming.stream import running_entity_totals
-
-    input_dir = str(tmp_path / "pages_in")
-    pages.repartition(4).write.parquet(input_dir)
-    stream = read_webpage_stream(spark, input_dir, max_files=1)  # several batches
-    mentions = extract_mentions(stream, parser_bc, window_tokens=10)
-    q = running_entity_totals(
-        mentions, str(tmp_path / "ckpt"), str(tmp_path / "totals")
-    )
-    q.awaitTermination(120)
-
-    rows = spark.read.parquet(str(tmp_path / "totals")).collect()
-    totals = {}
-    for r in rows:
-        totals[r["resolved"]] = max(totals.get(r["resolved"], 0), r["n_mentions"])
-
-    batch = {
-        r["resolved"]: r["cnt"]
-        for r in extract_mentions(pages, parser_bc, window_tokens=10)
-        .groupBy("resolved")
-        .agg(F.count("*").alias("cnt"))
-        .collect()
-    }
-    assert totals == batch
-
-
-def test_mention_rate_window(spark, pages, parser_bc):
-    mentions = extract_mentions(pages, parser_bc, window_tokens=10)
-    with_ts = mentions.join(pages.select("url", "warc_ts"), "url")
-    out = mention_rate_per_window(with_ts, "10 minutes", "10 minutes").collect()
-    assert len(out) > 0
-    total = sum(r["n_mentions"] for r in out)
-    assert total == mentions.count()
-    for r in out:
-        assert (r["window_end"] - r["window_start"]).total_seconds() == 600
 
 
 def test_merge_commit_token_idempotent(spark, tmp_path):
@@ -125,7 +85,9 @@ def test_merge_commit_token_idempotent(spark, tmp_path):
     assert spark.read.parquet(target).collect()[0]["weight"] == 6
 
 
-def test_stream_restart_resumes_from_checkpoint(spark, pages, parser_bc, tmp_path):
+def test_stream_restart_resumes_from_checkpoint(
+    spark, pages, parser_bc, pair_oracle, tmp_path
+):
     """north_rule: resumable from checkpoint. Stop the stream after the first
     tranche of files, add more, restart with the SAME checkpoint — already-
     committed batches must not be re-merged (no double counts) and the final
@@ -160,12 +122,7 @@ def test_stream_restart_resumes_from_checkpoint(spark, pages, parser_bc, tmp_pat
         (r["subj"], r["obj"]): r["weight"]
         for r in spark.read.parquet(triples_path).collect()
     }
-    batch = {
-        (r["subj"], r["obj"]): r["weight"]
-        for r in canonicalize_triples(
-            cooccurrence_triples(extract_mentions(pages, parser_bc, window_tokens=10))
-        ).collect()
-    }
+    batch = _batch_weights(pages, parser_bc, pair_oracle)
     assert streamed == batch
     # the restart added the new pages' weight on top of the first tranche
     assert sum(streamed.values()) > sum(after_first.values())
@@ -467,114 +424,6 @@ def test_merge_into_table_identifier_routing(spark, tmp_path):
             sinks.merge_into(spark, "table:triples", batch, commit_token="1")
         finally:
             sinks.iceberg_available = orig
-
-
-def test_streaming_dedup_exact_equals_batch(spark, pages, tmp_path):
-    """Stateful streaming dedup must keep exactly one row per distinct
-    content digest across micro-batch boundaries (a re-crawl arriving in a
-    LATER micro-batch is the case plain per-batch distinct would miss)."""
-    from gazetteer_entity_parser_spark.streaming.stream import streaming_dedup_exact
-
-    # re-crawls: every 3rd page again under a different url, forced into
-    # separate files so originals and re-crawls land in different batches
-    recrawls = (
-        pages.where(F.pmod(F.xxhash64("url"), F.lit(3)) == 0)
-        .withColumn("url", F.concat(F.col("url"), F.lit("?recrawl")))
-    )
-    input_dir = str(tmp_path / "pages_in")
-    pages.repartition(3).write.parquet(input_dir)
-    recrawls.repartition(2).write.mode("append").parquet(input_dir)
-
-    stream = read_webpage_stream(spark, input_dir, max_files=1)
-    out_dir = str(tmp_path / "deduped")
-    q = (
-        streaming_dedup_exact(stream, content_cols=("text",))
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    got = spark.read.parquet(out_dir)
-    n_distinct_texts = pages.select("text").distinct().count()
-    assert got.count() == n_distinct_texts  # one keeper per distinct text
-    assert got.select("text").distinct().count() == n_distinct_texts
-    # keepers cover exactly the batch-distinct text set
-    assert (
-        got.select("text").exceptAll(pages.select("text").distinct()).count() == 0
-    )
-
-
-def test_streaming_dedup_watermark_mode(spark, pages, tmp_path):
-    """Watermarked variant (bounded state): same-timestamp duplicates are
-    inside every watermark window, so the full corpus still dedups here;
-    the mode exists to EVICT digests older than the watermark at scale."""
-    from gazetteer_entity_parser_spark.streaming.stream import streaming_dedup_exact
-
-    input_dir = str(tmp_path / "pages_in")
-    pages.unionByName(pages).repartition(4).write.parquet(input_dir)
-    stream = read_webpage_stream(spark, input_dir, max_files=2)
-    out_dir = str(tmp_path / "deduped")
-    q = (
-        streaming_dedup_exact(
-            stream, content_cols=("text",),
-            event_time_col="warc_ts", watermark="1 hour",
-        )
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    assert (
-        spark.read.parquet(out_dir).count()
-        == pages.select("text").distinct().count()
-    )
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="event_time_col"):
-        streaming_dedup_exact(stream, watermark="1 hour")
-
-
-def test_streaming_dedup_digest_distinguishes_nulls(spark, tmp_path):
-    """(NULL, 'foo') vs ('foo', NULL) — and null vs empty text — must NOT
-    collide: concat_ws would skip the null column and silently drop a
-    distinct document; the JSON-struct digest keeps them apart."""
-    from gazetteer_entity_parser_spark.streaming.stream import streaming_dedup_exact
-
-    rows = [
-        ("u1", "foo", None),
-        ("u2", None, "foo"),
-        ("u3", None, None),
-        ("u4", "", None),
-        ("u5", "foo", None),  # true duplicate of u1
-    ]
-    df = spark.createDataFrame(rows, "url string, lang string, text string")
-    input_dir = str(tmp_path / "in")
-    df.repartition(1).write.parquet(input_dir)
-    stream = (
-        spark.readStream.schema("url string, lang string, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
-    )
-    out_dir = str(tmp_path / "out")
-    q = (
-        streaming_dedup_exact(stream, content_cols=("lang", "text"))
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    kept = spark.read.parquet(out_dir)
-    assert kept.count() == 4  # only the true duplicate dropped
-    assert sorted(r["url"] for r in kept.collect())[:4] == ["u1", "u2", "u3", "u4"]
 
 
 def test_merge_retains_one_superseded_generation(spark, tmp_path):

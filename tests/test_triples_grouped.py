@@ -1,15 +1,14 @@
-"""The grouped pair-expansion must be row-identical to the join formulation
-(both raw and canonicalized) — it's the physical optimization the pipeline
-and bench rely on."""
+"""The grouped pair expansion must be row-identical to a pure-Python pair
+oracle (both raw and canonicalized), and the fused partials to the grouped
+expansion — they are the two pair expansions the pipeline, the stream and
+the queries rely on."""
 
 import pytest
 
 from gazetteer_entity_parser_spark.operators.extract import extract_mentions
 from gazetteer_entity_parser_spark.operators.triples import (
     canonicalize_triples,
-    cooccurrence_triples,
     cooccurrence_triples_grouped,
-    triples_with_salted_agg,
 )
 from gazetteer_entity_parser_spark.sources.builder_job import (
     broadcast_parser,
@@ -32,19 +31,20 @@ def mentions(spark):
     return extract_mentions(docs, bc, window_tokens=7).cache()
 
 
-def test_grouped_equals_join_raw(spark, mentions):
-    a = sorted(map(tuple, cooccurrence_triples(mentions).collect()))
+def test_grouped_equals_pair_oracle_raw(spark, mentions, pair_oracle):
+    a = pair_oracle(mentions.collect())
     b = sorted(map(tuple, cooccurrence_triples_grouped(mentions).collect()))
     assert a == b
     assert len(a) > 0
 
 
-def test_grouped_equals_join_canonical(spark, mentions):
-    a = sorted(map(tuple, canonicalize_triples(cooccurrence_triples(mentions)).collect()))
+def test_grouped_equals_pair_oracle_canonical(spark, mentions, pair_oracle):
+    a = pair_oracle(mentions.collect(), canonical=True)
     b = sorted(
         map(tuple, canonicalize_triples(cooccurrence_triples_grouped(mentions)).collect())
     )
     assert a == b
+    assert len(a) > 0
 
 
 def test_fused_equals_unfused_canonical(spark):
@@ -63,13 +63,6 @@ def test_fused_equals_unfused_canonical(spark):
     b = sorted(map(tuple, fused.collect()))
     assert a == b
     assert len(a) > 0
-
-
-def test_salted_agg_equals_plain(spark, mentions):
-    raw = cooccurrence_triples_grouped(mentions)
-    a = sorted(map(tuple, canonicalize_triples(raw).collect()))
-    b = sorted(map(tuple, triples_with_salted_agg(raw, salt_buckets=8).collect()))
-    assert a == b
 
 
 def test_merge_canonical_triples_equals_full_rebuild(spark, mentions):
