@@ -27,6 +27,8 @@ from __future__ import annotations
 import heapq
 from dataclasses import dataclass
 
+import numpy as np
+
 from .fmath import check_threshold, f32
 from .registry import Registry, pylist
 from .tokenizer import tokenize
@@ -180,7 +182,8 @@ class Parser:
         values never match, rebased ranks never win ties). The memos hold
         the registry rows the kernel touched: ``_postings`` per token id,
         ``_entities`` (rank, token ids) and ``_entries`` (match entry) per
-        entity id."""
+        entity id. ``_need`` is the general lane's prefilter bound per
+        entity id (see :meth:`_admit`)."""
         self._single_token_table = None
         self._single_token_checked = False
         self._le2_tables = None
@@ -189,6 +192,7 @@ class Parser:
         self._postings = _Memo(lambda tid: reg.postings[tid])
         self._entities = _Memo(reg.get_tokens)
         self._entries = _Memo(self._entry)
+        self._need = _min_consumed(reg.entity_tokens.lengths(), self.threshold)
 
     def set_threshold(self, threshold: float) -> None:
         """reference: src/parser.rs:119-121 (stored as f32)."""
@@ -458,9 +462,24 @@ class Parser:
     ) -> list:
         """Single left-to-right pass growing one live match per entity
         (reference: src/parser.rs:222-309). Returns a heapq list of
-        (key, seq, PossibleMatch)."""
+        (key, seq, PossibleMatch).
+
+        Only entities :meth:`_admit` lets through are inserted. The bound is
+        exact: a final match of entity ``e`` consumes ``n`` distinct window
+        positions whose token is in ``e`` (seed, growth and back-absorbed
+        stop words alike), so ``n <= min(hits(e), len(e))``, and it passes
+        only if ``n >= need(len(e))`` (``check_threshold`` is monotone in
+        ``n``; edge cases are checked at 1.0, which needs no fewer). Entities
+        do not interact before :func:`_group_matches`, so dropping the ones
+        that can never be final leaves every other entity's state, and the
+        order of ``finals``, unchanged. ``threshold`` must be the parser's
+        own, which ``_need`` was built from."""
         reg = self.registry
         token_ids = reg.token_ids
+        ids = [token_ids.get(tok[2]) for tok in tokens]
+        admitted = self._admit([v for v in ids if v is not None])
+        if not admitted:
+            return []
         postings = self._postings
         stop_words = reg.stop_words
         edge_cases = reg.edge_cases
@@ -468,8 +487,7 @@ class Parser:
         finals: list[PossibleMatch] = []
         skipped: dict[int, int] = {}  # tok_idx -> token_id
 
-        for token_idx, tok in enumerate(tokens):
-            value = token_ids.get(tok[2])
+        for token_idx, value in enumerate(ids):
             if value is None:
                 continue
             res_vals = postings[value]
@@ -479,18 +497,20 @@ class Parser:
                 continue
             if value not in stop_words:
                 for res_val in res_vals:
-                    self._update_or_insert(
-                        value, res_val, token_idx, partial, finals, skipped, threshold
-                    )
+                    if res_val in admitted:
+                        self._update_or_insert(
+                            value, res_val, token_idx, partial, finals, skipped, threshold
+                        )
             else:
                 skipped[token_idx] = value
                 # edge cases containing this stop word: grow/start at θ=1.0
                 # (reference: src/parser.rs:252-269)
                 if edge_cases:
                     for res_val in edge_cases.intersection(res_vals):
-                        self._update_or_insert(
-                            value, res_val, token_idx, partial, finals, skipped, 1.0
-                        )
+                        if res_val in admitted:
+                            self._update_or_insert(
+                                value, res_val, token_idx, partial, finals, skipped, 1.0
+                            )
                 # grow (never initiate) existing non-edge-case matches that
                 # contain the stop word (reference: src/parser.rs:271-287)
                 res_set = set(res_vals)
@@ -507,6 +527,23 @@ class Parser:
                 finals.append(pm)
 
         return _group_matches(finals, max_alternatives)
+
+    def _admit(self, token_ids: list[int]) -> set[int]:
+        """The entities a window with these token ids (one per position,
+        stop words included) can match: ``hits(e)``, the number of positions
+        whose postings hold ``e``, reaches ``need(len(e))``. One gather over
+        the postings CSR and one ``np.unique`` count per window."""
+        offsets = self.registry.postings.offsets
+        ids = np.asarray(token_ids, np.int64)
+        starts = offsets[ids]
+        lens = offsets[ids + 1] - starts
+        total = int(lens.sum())
+        if not total:
+            return set()
+        # row i's slice, flattened: starts[i] + 0 .. lens[i] - 1
+        idx = np.arange(total) + np.repeat(starts - (np.cumsum(lens) - lens), lens)
+        ents, hits = np.unique(self.registry.postings.values[idx], return_counts=True)
+        return set(ents[hits >= self._need[ents]].tolist())
 
     # -------------------------------------------------------- upsert dispatch
 
@@ -637,6 +674,24 @@ class Parser:
         # spans are disjoint, so tok_start alone orders them
         out.sort()
         return out
+
+
+# ---------------------------------------------------------- prefilter bound
+
+
+def _min_consumed(lengths: np.ndarray, threshold: float) -> np.ndarray:
+    """Per entity, ``need(len(e))``: the fewest consumed tokens ``n <=
+    len(e)`` with ``check_threshold(n, len(e) - n, θ)``. θ is capped at 1.0,
+    the threshold edge cases are checked at, so the bound holds for them
+    too (and for a θ above 1 nothing else passes anyway)."""
+    theta = threshold if threshold < 1.0 else 1.0
+    need = [0]
+    for n_tokens in range(1, int(lengths.max(initial=0)) + 1):
+        need.append(
+            next(n for n in range(1, n_tokens + 1)
+                 if check_threshold(n, n_tokens - n, theta))
+        )
+    return np.asarray(need, np.int64)[lengths]
 
 
 # ------------------------------------------------------------------ grouping

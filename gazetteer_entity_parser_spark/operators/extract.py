@@ -232,6 +232,12 @@ def extract_triple_partials(
     shuffle entirely. Canonical equality with the grouped pair expansion is
     pinned in tests/test_triples_grouped.py.
 
+    Callers: :func:`canonical_triples_fused` (the final rollup) and
+    ``streaming.stream.start_triples_stream``, whose per-batch merge rolls
+    up the partials of different tasks on the store bucket. Partials are
+    one row per (subj, obj) and Arrow batch, so a key may repeat across
+    tasks until one of those rollups runs.
+
     Use ``triples.cooccurrence_triples_grouped`` over extracted mentions when
     the raw triple table (url/sent_idx provenance) must be materialized.
     """

@@ -4,9 +4,11 @@ the reference stops at mentions; SURVEY.md §4.3 Stages C-D).
 - co-occurrence: every ordered pair of mentions within one (url, sent_idx)
   window; subj is the earlier mention. One shuffle groups each window's
   mentions, and the pairs are expanded in-partition; pair blowup is bounded
-  by the window size chosen at extraction. Canonical triples skip this
-  operator: ``extract.extract_triple_partials`` expands and pre-aggregates
-  the pairs inside the extraction UDF.
+  by the window size chosen at extraction. Raw triples with (url, sent_idx)
+  provenance (``kg_triples_raw``, ``run_pipeline``) use this operator.
+  Canonical triples skip it: ``extract.extract_triple_partials`` expands and
+  pre-aggregates the pairs inside the extraction UDF, for the
+  ``kg_triples_canonical`` query and for every streaming micro-batch.
 - canonicalization: aliases already resolve to their canonical value inside
   the kernel (reference: src/parser_registry.rs:175-192); the groupBy merges
   duplicate alias-level triples, keeps the most popular (min-rank) witness

@@ -135,6 +135,21 @@ def _store_n_buckets(version_dir: str) -> int | None:
     return None
 
 
+def _rollup(triples: DataFrame) -> DataFrame:
+    """One row per (subj, pred, obj): summed weight, min ranks. Clustered on
+    ``bucket`` first, which also satisfies the grouping: one exchange, and
+    each bucket is written by exactly one task."""
+    return (
+        triples.repartition("bucket")
+        .groupBy("subj", "pred", "obj", "bucket")
+        .agg(
+            F.sum("weight").alias("weight"),
+            F.min("subj_rank").alias("subj_rank"),
+            F.min("obj_rank").alias("obj_rank"),
+        )
+    )
+
+
 def merge_into_parquet(
     spark: SparkSession,
     target_path: str,
@@ -153,11 +168,17 @@ def merge_into_parquet(
     O(B/N of the table), not O(table). ``n_buckets`` is fixed at store
     creation (an ``_nbuckets_<N>`` marker wins over the parameter afterwards).
 
+    ``updates`` may repeat a ``(subj, pred, obj)`` key (the fused triples
+    stage emits one partial per key and task): every write sums the weights
+    and takes the min ranks per key, so the store holds one row per key
+    whether or not it existed before.
+
     Write layout: every write is hash-partitioned on ``bucket`` (AQE sizes
-    the task count from the bytes), so each touched bucket is written by one
-    task into ONE parquet file. A merge into an absent store is a plain write
-    in a single pass; a merge into an existing store first persists the
-    updates and collects the touched buckets that prune its read.
+    the task count from the bytes) and grouped per key within that
+    partitioning, so each touched bucket is written by one task into ONE
+    parquet file. A merge into an absent store is a single pass over the
+    updates; a merge into an existing store first persists the updates and
+    collects the touched buckets that prune its read.
 
     Publishing is ONE atomic ``os.rename`` of a symlink onto the target
     (see the layout note above) — the target is never absent, a torn merge
@@ -186,10 +207,8 @@ def merge_into_parquet(
     new_version = _next_version_path(target_path)
 
     if current_version is None:
-        # absent store: the merge is a plain write, one pass over the updates
-        upd.repartition("bucket").write.mode("overwrite").partitionBy(
-            "bucket"
-        ).parquet(new_version)
+        # absent store: one pass over the updates
+        _rollup(upd).write.mode("overwrite").partitionBy("bucket").parquet(new_version)
         if not any(e.startswith("bucket=") for e in os.listdir(new_version)):
             # empty batch onto a non-existent store: publishing would create a
             # version dir with ZERO parquet files, which every later read fails
@@ -217,18 +236,7 @@ def merge_into_parquet(
                 current = current.where(
                     F.col("bucket").isin(touched) if touched else F.lit(False)
                 )
-            # clustered on bucket, which also satisfies the grouping below: one
-            # exchange, and each touched bucket is written by exactly one task
-            merged = (
-                current.unionByName(upd)
-                .repartition("bucket")
-                .groupBy("subj", "pred", "obj", "bucket")
-                .agg(
-                    F.sum("weight").alias("weight"),
-                    F.min("subj_rank").alias("subj_rank"),
-                    F.min("obj_rank").alias("obj_rank"),
-                )
-            )
+            merged = _rollup(current.unionByName(upd))
             merged.write.mode("overwrite").partitionBy("bucket").parquet(new_version)
         finally:
             upd.unpersist()

@@ -1,6 +1,7 @@
 """spark-submit entry point for the STREAMING KG-construction path:
-watch a directory of webpage parquet files, run the mention→triples
-micro-batch stream into the MERGE-upsert triples store (commit-token
+watch a directory of webpage parquet files, run the micro-batch stream of
+fused triple partials (matching, pair expansion and a per-batch rollup in
+one UDF stage) into the MERGE-upsert triples store (commit-token
 idempotent, effectively exactly-once totals), then optionally
 materialize the graph-analytics serving tables from the final store.
 

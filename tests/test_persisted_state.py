@@ -1,11 +1,22 @@
 """A long-lived session must not accumulate persisted frames: repeated
-driver queries leave the set of persistent RDDs as they found it."""
+driver queries and streaming drains leave the set of persistent RDDs as they
+found it."""
 
 import shutil
 
+from gazetteer_entity_parser_spark.plans.pipeline import docs_from_sf_dir
 from gazetteer_entity_parser_spark.plans.queries import (
     q_kg_incremental_merge,
     q_kg_triples_raw,
+)
+from gazetteer_entity_parser_spark.sources.builder_job import (
+    broadcast_parser,
+    build_parser_distributed,
+)
+from gazetteer_entity_parser_spark.sources.gazetteer import vocabulary_gazetteer
+from gazetteer_entity_parser_spark.streaming.stream import (
+    read_webpage_stream,
+    start_triples_stream,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -22,4 +33,27 @@ def test_triples_queries_leave_no_persisted_frames(spark, tmp_path):
         for query in (q_kg_triples_raw, q_kg_incremental_merge):
             assert query(spark, sf_dir).collect()
     # ids, not a count: the context cleaner may drop other tests' RDDs
+    assert set(jsc.getPersistentRDDs()) - before == set()
+
+
+def test_streaming_drains_leave_no_persisted_frames(spark, tmp_path):
+    pages = docs_from_sf_dir(spark, SF).limit(30)
+    input_dir = str(tmp_path / "pages_in")
+    pages.repartition(2).write.parquet(input_dir)
+    gaz = vocabulary_gazetteer(pages.select("text"), 20)
+    parser_bc = broadcast_parser(spark, build_parser_distributed(gaz, threshold=1.0))
+    store = str(tmp_path / "triples")
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs())
+    # three drains, each with its own checkpoint, so each re-merges every
+    # file into the one store: the first into an absent store, the rest into
+    # an existing one (the branch that persists its updates)
+    for i in range(3):
+        q = start_triples_stream(
+            spark, read_webpage_stream(spark, input_dir, max_files=1),
+            parser_bc, store, str(tmp_path / f"ckpt{i}"),
+        )
+        q.awaitTermination(120)
+        assert q.exception() is None
+    assert spark.read.parquet(store).count()
     assert set(jsc.getPersistentRDDs()) - before == set()

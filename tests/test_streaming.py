@@ -41,7 +41,8 @@ def _batch_weights(pages, parser_bc, pair_oracle) -> dict:
 
 def test_stream_equals_batch(spark, pages, parser_bc, pair_oracle, tmp_path):
     input_dir = str(tmp_path / "pages_in")
-    # several files so maxFilesPerTrigger yields multiple micro-batches
+    # five files at two per trigger: several micro-batches, and the first
+    # spans two tasks whose partials the merge must roll up
     pages.repartition(5).write.parquet(input_dir)
 
     triples_path = str(tmp_path / "triples")
@@ -49,14 +50,17 @@ def test_stream_equals_batch(spark, pages, parser_bc, pair_oracle, tmp_path):
     stream = read_webpage_stream(spark, input_dir, max_files=2)
     q = start_triples_stream(spark, stream, parser_bc, triples_path, ckpt)
     q.awaitTermination(120)
+    assert len([p for p in q.recentProgress if p["numInputRows"] > 0]) >= 2
 
-    streamed = {
-        (r["subj"], r["obj"]): r["weight"]
-        for r in spark.read.parquet(triples_path).collect()
-    }
-    batch = _batch_weights(pages, parser_bc, pair_oracle)
-    # micro-batch boundaries never split a document, so the merged totals match
-    assert streamed == batch
+    cols = ["subj", "pred", "obj", "weight", "subj_rank", "obj_rank"]
+    streamed = sorted(
+        tuple(r) for r in spark.read.parquet(triples_path).select(*cols).collect()
+    )
+    mentions = extract_mentions(pages, parser_bc, window_tokens=10).collect()
+    # micro-batch boundaries never split a document, so the merged rows match:
+    # one row per key, same weight and min ranks
+    assert streamed == pair_oracle(mentions, canonical=True)
+    assert streamed
 
 
 def test_merge_commit_token_idempotent(spark, tmp_path):
@@ -382,6 +386,39 @@ def test_empty_first_merge_does_not_poison_store(spark, tmp_path):
     assert merge_into_parquet(spark, target, empty, commit_token="2") is True
     assert merge_into_parquet(spark, target, empty, commit_token="2") is False
     assert spark.read.parquet(target).collect()[0]["weight"] == 3
+
+
+def test_merge_rolls_up_repeated_keys(spark, tmp_path):
+    """Updates may repeat a (subj, pred, obj) key — the fused triples stage
+    emits one partial per key and task. A merge into an absent store and one
+    into an existing store both leave one row per key, with the weights
+    summed and the ranks minimised."""
+    from gazetteer_entity_parser_spark.sources.sinks import merge_into_parquet
+
+    schema = (
+        "subj string, pred string, obj string, weight bigint, "
+        "subj_rank bigint, obj_rank bigint"
+    )
+    dup = spark.createDataFrame(
+        [("A", "p", "B", 2, 5, 7), ("A", "p", "B", 3, 4, 9),
+         ("C", "p", "D", 1, 0, 0), ("A", "p", "B", 1, 6, 1)],
+        schema,
+    ).repartition(3)
+    want = [("A", "p", "B", 6, 4, 1), ("C", "p", "D", 1, 0, 0)]
+
+    def rows(store):
+        return sorted(tuple(r) for r in spark.read.parquet(store).select(
+            "subj", "pred", "obj", "weight", "subj_rank", "obj_rank").collect())
+
+    absent = str(tmp_path / "absent")
+    assert merge_into_parquet(spark, absent, dup, commit_token="0")
+    assert rows(absent) == want
+
+    existing = str(tmp_path / "existing")
+    seed = spark.createDataFrame([("X", "p", "Y", 1, 0, 0)], schema)
+    assert merge_into_parquet(spark, existing, seed, commit_token="0")
+    assert merge_into_parquet(spark, existing, dup, commit_token="1")
+    assert rows(existing) == sorted(want + [("X", "p", "Y", 1, 0, 0)])
 
 
 def test_merge_into_table_identifier_routing(spark, tmp_path):
