@@ -9,8 +9,13 @@ Scale design (SURVEY.md §4.3 Stage B):
 - project to (key, text) *before* the UDF boundary so Catalyst prunes the
   parquet/Iceberg scan (dropping ``html: binary`` is the single biggest I/O
   win at 100 TB);
-- optional salted repartition: Common-Crawl shards are size-skewed (giant
-  pages, per-host clustering); ``pmod(xxhash64(url), P)`` spreads them;
+- optional repartition on the url (``num_partitions``): Common-Crawl shards
+  are size-skewed (giant pages, per-host clustering); hash-partitioning on
+  the url spreads them, keeps a url's rows in one task and leaves no
+  partition empty. ``run_pipeline`` leaves it off and repartitions on its
+  checkpoint bucket with no count, so AQE sizes the stage from its bytes;
+- output frames are bounded by the session's Arrow batch cap, so a task
+  that matches many pages never holds one giant frame;
 - sentence splitting + fixed token windows bound per-kernel-call state, so a
   1 GB page costs many small kernel calls, not one quadratic one; mentions
   never span windows, and downstream triples are windowed anyway, so the
@@ -123,9 +128,11 @@ def extract_mentions(
 ) -> DataFrame:
     """docs(key, text, ...) -> mentions DataFrame (MENTIONS_SCHEMA).
 
-    ``num_partitions`` triggers the salted repartition for skewed corpora;
-    leave None to inherit upstream partitioning (e.g. when the scan already
-    produced well-sized splits).
+    ``num_partitions`` hash-repartitions the pages on the url for skewed
+    corpora; leave None to inherit upstream partitioning (e.g. when the scan
+    already produced well-sized splits, or the caller has repartitioned).
+    Each task pays a fixed Python-worker start-up cost, so more partitions
+    than the work needs cost wall time (SCALING.md).
 
     ``columns`` projects the OUTPUT inside the UDF: Catalyst cannot push
     column pruning through a mapInPandas boundary, so a narrow consumer (the
@@ -136,9 +143,7 @@ def extract_mentions(
     """
     pruned = docs.select(F.col(key_col).alias("url"), F.col(text_col).alias("text"))
     if num_partitions:
-        pruned = pruned.repartition(
-            num_partitions, F.pmod(F.xxhash64("url"), F.lit(num_partitions))
-        )
+        pruned = pruned.repartition(num_partitions, "url")
     all_fields = [f.name for f in MENTIONS_SCHEMA.fields]
     if columns is None:
         cols = all_fields
@@ -155,6 +160,14 @@ def extract_mentions(
             raise ValueError(f"unknown mention columns: {sorted(unknown)}")
         cols = [c for c in all_fields if c in set(columns)]
         schema = T.StructType([MENTIONS_SCHEMA[c] for c in cols])
+
+    # a frame is flushed once it reaches the session's Arrow batch cap
+    # (checked after each window; 0 or less means no cap, as in Spark)
+    frame_rows = int(
+        docs.sparkSession.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    )
+    if frame_rows <= 0:
+        frame_rows = float("inf")
 
     def run_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         match = parser_broadcast.value.match
@@ -192,6 +205,10 @@ def extract_mentions(
                             if k
                             else ()
                         )
+                    if len(o_url) >= frame_rows:
+                        yield pd.DataFrame(dict(zip(all_fields, out)), columns=cols)
+                        for o in out:
+                            o.clear()
             if o_url:  # empty frames would carry float64 columns into Arrow
                 yield pd.DataFrame(dict(zip(all_fields, out)), columns=cols)
 
@@ -243,9 +260,7 @@ def extract_triple_partials(
     """
     pruned = docs.select(F.col(key_col).alias("url"), F.col(text_col).alias("text"))
     if num_partitions:
-        pruned = pruned.repartition(
-            num_partitions, F.pmod(F.xxhash64("url"), F.lit(num_partitions))
-        )
+        pruned = pruned.repartition(num_partitions, "url")
 
     def run_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         parser: Parser = parser_broadcast.value

@@ -26,9 +26,11 @@ converges in ~6 alternations where min-label would need 1023 rounds
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 
 def _canonical_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -259,6 +261,48 @@ def _integral_weight(weight_col: str, op_name: str):
     )
 
 
+_LOCAL_ENTITY_TYPES = (
+    T.StringType, T.LongType, T.IntegerType, T.ShortType, T.ByteType,
+)
+
+
+def _small_graph(edges: DataFrame, cap: int, compute, value_cols: list[str]):
+    """The one small-graph dispatch of the iterative graph operators.
+
+    ``edges``' first two columns are the endpoints. When both have the same
+    string or integral type, a bounded probe (``limit(cap+1)``, one job)
+    finds at most ``cap`` rows and no NULL endpoint, ``compute(rows)`` runs
+    on the driver and its ``[(entity, *values)]`` result is returned as a
+    DataFrame ``(entity, *value_cols)`` with BIGINT values. The result goes
+    back as an Arrow table, which the JVM scans directly; a Python list
+    would be parallelized through a Python task per default partition.
+    Returns None when the caller must take its distributed plan: the cap is
+    0, the probe overflows it, an endpoint is NULL or the types differ.
+    """
+    a, b = edges.columns[:2]
+    ent_t = edges.schema[a].dataType
+    if (
+        cap <= 0
+        or ent_t != edges.schema[b].dataType
+        or not isinstance(ent_t, _LOCAL_ENTITY_TYPES)
+    ):
+        return None
+    probe = edges.limit(int(cap) + 1).collect()
+    if len(probe) > cap or any(r[0] is None or r[1] is None for r in probe):
+        return None
+    cols = list(zip(*compute(probe))) or [()] * (1 + len(value_cols))
+    table = pa.table(
+        [pa.array(cols[0], to_arrow_type(ent_t))]
+        + [pa.array(c, pa.int64()) for c in cols[1:]],
+        names=["entity", *value_cols],
+    )
+    schema = T.StructType(
+        [T.StructField("entity", ent_t)]
+        + [T.StructField(c, T.LongType()) for c in value_cols]
+    )
+    return edges.sparkSession.createDataFrame(table, schema)
+
+
 def _local_pagerank(rows, n_iter, d_pct, scale, redistribute_dangling):
     """Driver-side replay of the pagerank recurrence for graphs under the
     local cap: numpy elementwise float64 reproduces the distributed
@@ -355,8 +399,9 @@ def pagerank(
     Adaptive small-graph execution (``local_edge_cap``, r6): an iterative
     plan is ~3 exchanges PER ITERATION of fixed scheduling cost (the
     n_iter=10 query plan carries 220 Exchange nodes) — absurd for a graph
-    that fits in one task. When a bounded probe (``limit(cap+1)``, one
-    job) shows at most ``local_edge_cap`` edges with same-typed, non-NULL
+    that fits in one task. When the small-graph dispatch
+    (:func:`_small_graph`: a bounded ``limit(cap+1)`` probe, one job) shows
+    at most ``local_edge_cap`` edges with same-typed, non-NULL
     endpoints, the recurrence is replayed on the driver in numpy —
     bit-identical by the same engine-portability argument as the DuckDB
     oracle (integer sums + exact floor(double)); the final
@@ -383,41 +428,20 @@ def pagerank(
         # then zeroes wout). Integer-weight contract: fail on both.
         _integral_weight(weight_col, "pagerank").alias("_w"),
     )
-    src_t = e.schema["_src"].dataType
-    dst_t = e.schema["_dst"].dataType
-    if (
-        local_edge_cap > 0
-        and src_t == dst_t
-        and isinstance(
-            src_t,
-            (T.StringType, T.LongType, T.IntegerType, T.ShortType, T.ByteType),
+    local = _small_graph(
+        e,
+        local_edge_cap,
+        lambda rows: _local_pagerank(
+            rows, n_iter, d_pct, scale, redistribute_dangling
+        ),
+        ["r"],
+    )
+    if local is not None:
+        return local.select(
+            "entity",
+            F.col("r").alias("rank_fp"),
+            F.round(F.col("r") / F.lit(float(scale)), 6).alias("score"),
         )
-    ):
-        probe = e.limit(int(local_edge_cap) + 1).collect()
-        if len(probe) <= local_edge_cap and all(
-            row["_src"] is not None and row["_dst"] is not None for row in probe
-        ):
-            ranks_local = _local_pagerank(
-                [(row["_src"], row["_dst"], row["_w"]) for row in probe],
-                n_iter,
-                d_pct,
-                scale,
-                redistribute_dangling,
-            )
-            out = e.sparkSession.createDataFrame(
-                ranks_local,
-                T.StructType(
-                    [
-                        T.StructField("entity", src_t, True),
-                        T.StructField("r", T.LongType(), True),
-                    ]
-                ),
-            )
-            return out.select(
-                "entity",
-                F.col("r").alias("rank_fp"),
-                F.round(F.col("r") / F.lit(float(scale)), 6).alias("score"),
-            )
     nodes = (
         e.select(F.col("_src").alias("entity"))
         .unionByName(e.select(F.col("_dst").alias("entity")))
@@ -540,8 +564,9 @@ def triangle_counts(
     Output: (entity, degree, triangles, clustering) with
     clustering = 2*T / (deg*(deg-1)), 0.0 for deg < 2, rounded to 6.
 
-    Adaptive small-graph execution (``local_edge_cap``, r6, same pattern
-    as :func:`pagerank`): when a bounded probe of the already-filtered
+    Adaptive small-graph execution (``local_edge_cap``, r6, the same
+    :func:`_small_graph` dispatch as :func:`pagerank`): when a bounded
+    probe of the already-filtered
     (a != b — NULLs and self-loops drop identically in both paths) edge
     projection shows at most ``local_edge_cap`` rows with same-typed
     endpoints, degree and triangle counts — pure integers, independent
@@ -553,30 +578,11 @@ def triangle_counts(
     filtered = edges.select(
         F.col(src_col).alias("a"), F.col(dst_col).alias("b")
     ).where(F.col("a") != F.col("b"))
-    src_t = filtered.schema["a"].dataType
-    dst_t = filtered.schema["b"].dataType
-    if (
-        local_edge_cap > 0
-        and src_t == dst_t
-        and isinstance(
-            src_t,
-            (T.StringType, T.LongType, T.IntegerType, T.ShortType, T.ByteType),
-        )
-    ):
-        probe = filtered.limit(int(local_edge_cap) + 1).collect()
-        if len(probe) <= local_edge_cap:
-            local = _local_triangle_counts([(r["a"], r["b"]) for r in probe])
-            deg_tri = edges.sparkSession.createDataFrame(
-                local,
-                T.StructType(
-                    [
-                        T.StructField("entity", src_t, True),
-                        T.StructField("degree", T.LongType(), True),
-                        T.StructField("triangles", T.LongType(), True),
-                    ]
-                ),
-            )
-            return _triangle_output(deg_tri)
+    local = _small_graph(
+        filtered, local_edge_cap, _local_triangle_counts, ["degree", "triangles"]
+    )
+    if local is not None:
+        return _triangle_output(local)
     und = (
         filtered
         .select(

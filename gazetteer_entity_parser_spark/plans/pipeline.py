@@ -4,10 +4,13 @@ per-partition lineage + metrics").
 
 Stages (SURVEY.md §4.3):
   A. build: gazetteer DataFrame -> Registry -> broadcast (tiny).
-  B. match: docs -> mentions via one mapInPandas kernel stage; output
-     checkpointed to parquet partitioned by ``bucket = pmod(xxhash64(url), P)``
-     so any bucket replays independently (kernel is deterministic =>
-     rewrite-same-bucket is idempotent).
+  B. match: docs -> mentions via one mapInPandas kernel stage; the pages
+     are repartitioned on ``bucket = pmod(xxhash64(url), P)`` with no
+     partition count, so AQE sizes the kernel stage from its bytes (each
+     Python task pays a fixed worker start-up, SCALING.md) and each bucket
+     stays in one task; output checkpointed to parquet partitioned by
+     ``bucket``, one file per bucket, so any bucket replays independently
+     (kernel is deterministic => rewrite-same-bucket is idempotent).
   C. triples: windowed co-occurrence pairs by grouped pair expansion (one
      shuffle over the mention checkpoint).
   D. canonicalize + MERGE INTO the triples store (Iceberg or parquet); the
@@ -45,7 +48,8 @@ class PipelineConfig:
     additional_stop_words: list[str] = field(default_factory=list)
     max_alternatives: int = 0
     window_tokens: int | None = 10
-    n_buckets: int = 32  # checkpoint/replay granularity AND match parallelism
+    # checkpoint/replay granularity; AQE sizes the match stage from its bytes
+    n_buckets: int = 32
     use_alias_gazetteer: bool = False
 
 
@@ -105,11 +109,10 @@ def run_pipeline(
     # ---- Stage B: match + checkpoint
     mentions_path = os.path.join(workdir, "mentions")
     mentions = extract_mentions(
-        docs.select("url", "text"),
+        docs.select("url", "text").repartition(_bucket("url", cfg.n_buckets)),
         bc,
         max_alternatives=cfg.max_alternatives,
         window_tokens=cfg.window_tokens,
-        num_partitions=cfg.n_buckets,
     ).withColumn("bucket", _bucket("url", cfg.n_buckets))
     mentions.write.mode("overwrite").partitionBy("bucket").parquet(mentions_path)
     mentions_ck = spark.read.parquet(mentions_path)

@@ -596,16 +596,17 @@ def q_kg_dump_load_roundtrip(spark, sf_dir):
     contract (reference: src/parser.rs dump/from_folder +
     src/parser_registry.rs:259-290): the reloaded parser must reproduce the
     alias gazetteer byte-for-byte, which the oracle rebuilds in SQL."""
+    import os
     import tempfile
-    import uuid as _uuid
-    from pathlib import Path
 
     from ..kernel.builder import dump_parser, load_parser
 
     bc = _parser_cache(spark, sf_dir, "alias")
-    folder = str(Path(tempfile.gettempdir()) / f"kg_dump_{_uuid.uuid4().hex[:8]}")
-    dump_parser(bc.value, folder)
-    reloaded = load_parser(folder)
+    # the dump is removed once it is reloaded
+    with tempfile.TemporaryDirectory(prefix="kg_dump_") as tmp:
+        folder = os.path.join(tmp, "parser")
+        dump_parser(bc.value, folder)
+        reloaded = load_parser(folder)
     rows = [
         (" ".join(toks), resolved, rank)
         for toks, resolved, _inj, rank in reloaded.registry.get_entity_values(True)

@@ -6,6 +6,7 @@ import pytest
 from gazetteer_entity_parser_spark.kernel import ParserBuilder, tokenize
 from gazetteer_entity_parser_spark.operators.extract import (
     extract_mentions,
+    extract_triple_partials,
     iter_windows,
     split_sentences,
 )
@@ -143,6 +144,47 @@ def test_extract_matches_kernel_no_windowing(spark, lane_parsers):
 
 def test_extract_matches_kernel_with_windows(spark, lane_parsers):
     assert_extract_matches_kernel(spark, lane_parsers, 4)
+
+
+def test_small_arrow_cap_flushes_identical_rows(spark, parser):
+    """The UDF flushes a frame whenever its rows reach the session's Arrow
+    batch cap. Under a cap of 16 (many flushes per batch, and inside one
+    long page) the rows equal those at the default cap, for every column
+    and k in {0, 5}."""
+    docs = [(f"{u}#{i}", t) for i in range(24) for u, t in DOCS]
+    docs.append(("long", "the king of pop and the fab four. " * 40))
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    default = spark.conf.get(key)
+    for k in (0, 5):
+        want = spark_mentions(spark, parser, docs, 4, k)
+        assert len(want) > 16 * 8
+        spark.conf.set(key, "16")
+        try:
+            got = spark_mentions(spark, parser, docs, 4, k)
+        finally:
+            spark.conf.set(key, default)
+        assert got == want, k
+
+
+@pytest.mark.parametrize("operator", [extract_mentions, extract_triple_partials])
+def test_num_partitions_leaves_no_partition_empty(spark, parser, operator):
+    """``num_partitions`` hash-partitions on the url itself: 500 distinct
+    urls fill all 8 partitions, and a url's rows stay in one of them."""
+    from pyspark.sql import functions as F
+
+    bc = spark.sparkContext.broadcast(parser)
+    docs = spark.createDataFrame(
+        [(f"u{i}", "the fab four and the king of pop") for i in range(500)],
+        "url string, text string",
+    )
+    out = operator(docs, bc, num_partitions=8).withColumn(
+        "p", F.spark_partition_id()
+    )
+    parts = out.groupBy("p").count().collect()
+    assert len(parts) == 8, sorted(r["p"] for r in parts)
+    if "url" in out.columns:
+        per_url = out.groupBy("url").agg(F.countDistinct("p").alias("n"))
+        assert per_url.where("n > 1").count() == 0
 
 
 def test_mention_offsets_slice_original_text(spark, parser):

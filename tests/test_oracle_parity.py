@@ -73,3 +73,13 @@ def test_oracle_sql_is_pinned():
     assert len(ORACLES) == 81
     digest = hashlib.sha256(json.dumps(ORACLES, sort_keys=True).encode()).hexdigest()
     assert digest == "3ee619b78bcf4d82821bd58042ed732d3a846d8eaaedcccf6a97a452e9fe6626"
+
+
+def test_dump_load_roundtrip_leaves_no_temp_dir(spark, tmp_path, monkeypatch):
+    """kg_dump_load_roundtrip dumps the parser into a temporary directory
+    and removes it once the parser is reloaded."""
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    assert QUERIES["kg_dump_load_roundtrip"](spark, SF).count() > 0
+    assert list(tmp_path.iterdir()) == []

@@ -17,6 +17,10 @@ def _rows(df):
     )
 
 
+def _types(df):
+    return [(f.name, f.dataType) for f in df.schema.fields]
+
+
 GRAPHS = {
     "reference": [
         ("a", "b", 3), ("a", "c", 1), ("b", "c", 2), ("c", "a", 5),
@@ -67,6 +71,34 @@ def test_integer_entities_take_local_path_identically(spark):
     assert _rows(pagerank(df, n_iter=5)) == _rows(
         pagerank(df, n_iter=5, local_edge_cap=0)
     )
+
+
+@pytest.mark.parametrize("ent_type", ["int", "smallint", "tinyint"])
+def test_narrow_integer_entities_take_local_path_identically(spark, ent_type):
+    df = spark.createDataFrame(
+        [(1, 2, 1), (2, 3, 2), (3, 1, 1), (3, 3, 4), (4, 1, 3)],
+        f"subj {ent_type}, obj {ent_type}, weight bigint",
+    )
+    local = pagerank(df, n_iter=5)
+    assert _types(local) == _types(pagerank(df, n_iter=5, local_edge_cap=0))
+    assert _rows(local) == _rows(pagerank(df, n_iter=5, local_edge_cap=0))
+
+
+def test_empty_edge_set_identical(spark):
+    df = spark.createDataFrame([], "subj string, obj string, weight bigint")
+    local = pagerank(df, n_iter=3)
+    assert _types(local) == _types(pagerank(df, n_iter=3, local_edge_cap=0))
+    assert _rows(local) == _rows(pagerank(df, n_iter=3, local_edge_cap=0)) == []
+
+
+def test_local_result_is_a_jvm_scan(spark):
+    """The driver-local result goes back as an Arrow table: its RDD lineage
+    holds no PythonRDD, so reading it starts no Python worker."""
+    df = spark.createDataFrame(
+        GRAPHS["reference"], "subj string, obj string, weight bigint"
+    )
+    lineage = pagerank(df)._jdf.queryExecution().toRdd().toDebugString()
+    assert "PythonRDD" not in lineage, lineage
 
 
 def test_null_endpoint_declines_local_path(spark):

@@ -73,6 +73,21 @@ def test_triples_store_one_file_per_bucket(result):
         assert len(files) == 1, (b, files)
 
 
+def test_mention_checkpoint_one_file_per_bucket(result):
+    """Stage B repartitions on the bucket (AQE picks the task count), so
+    every bucket is written by one task: each ``bucket=K`` dir of the
+    mention checkpoint holds exactly one parquet file."""
+    import os
+
+    res, _docs, _ = result
+    buckets = [e for e in os.listdir(res["mentions_path"]) if e.startswith("bucket=")]
+    assert buckets
+    for b in buckets:
+        path = os.path.join(res["mentions_path"], b)
+        files = [f for f in os.listdir(path) if f.endswith(".parquet")]
+        assert len(files) == 1, (b, files)
+
+
 def test_text_byte_identical_per_url(spark, result, sf_smoke):
     _res, docs, _ = result
     raw = spark.read.parquet(f"{sf_smoke}/documents.parquet").select(

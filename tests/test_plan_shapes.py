@@ -75,3 +75,33 @@ def test_graph_family_shares_one_cached_extraction(spark):
     live = plan.split("InMemoryRelation", 1)[0]
     assert "InMemoryTableScan" in plan
     assert "MapInPandas" not in live, live[:2000]
+
+
+def test_pipeline_stage_b_lets_aqe_size_the_kernel_stage(spark, tmp_path, monkeypatch):
+    """run_pipeline repartitions the pages on the bucket key with no count,
+    so the Stage B exchange is REPARTITION_BY_COL (AQE may coalesce it to
+    the partitions the bytes need), not a fixed REPARTITION_BY_NUM."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from gazetteer_entity_parser_spark.plans.pipeline import (
+        PipelineConfig,
+        docs_from_sf_dir,
+        run_pipeline,
+    )
+
+    written = {}
+    parquet = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        written[path] = self._df
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    docs = docs_from_sf_dir(spark, "/root/testdata/sf0.001")
+    res = run_pipeline(
+        spark, docs, str(tmp_path), PipelineConfig(n_entities=20, n_buckets=8)
+    )
+    plan = _plan(written[res["mentions_path"]])
+    assert "MapInPandas" in plan
+    assert "REPARTITION_BY_COL" in plan, plan[:3000]
+    assert "REPARTITION_BY_NUM" not in plan, plan[:3000]

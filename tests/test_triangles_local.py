@@ -17,6 +17,10 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+def _types(df):
+    return [(f.name, f.dataType) for f in df.schema.fields]
+
+
 GRAPHS = {
     # two triangles sharing an edge + a pendant + a disconnected edge
     "shared_edge": [
@@ -73,6 +77,34 @@ def test_integer_entities_take_local_path_identically(spark):
     assert _rows(triangle_counts(df)) == _rows(
         triangle_counts(df, local_edge_cap=0)
     )
+
+
+@pytest.mark.parametrize("ent_type", ["int", "smallint", "tinyint"])
+def test_narrow_integer_entities_take_local_path_identically(spark, ent_type):
+    df = spark.createDataFrame(
+        [(1, 2, 1), (2, 3, 1), (3, 1, 1), (3, 4, 1), (4, 4, 1)],
+        f"subj {ent_type}, obj {ent_type}, weight bigint",
+    )
+    local = triangle_counts(df)
+    assert _types(local) == _types(triangle_counts(df, local_edge_cap=0))
+    assert _rows(local) == _rows(triangle_counts(df, local_edge_cap=0))
+
+
+def test_empty_edge_set_identical(spark):
+    df = spark.createDataFrame([], "subj string, obj string, weight bigint")
+    local = triangle_counts(df)
+    assert _types(local) == _types(triangle_counts(df, local_edge_cap=0))
+    assert _rows(local) == _rows(triangle_counts(df, local_edge_cap=0)) == []
+
+
+def test_local_result_is_a_jvm_scan(spark):
+    """The driver-local result goes back as an Arrow table: its RDD lineage
+    holds no PythonRDD, so reading it starts no Python worker."""
+    df = spark.createDataFrame(
+        GRAPHS["shared_edge"], "subj string, obj string, weight bigint"
+    )
+    lineage = triangle_counts(df)._jdf.queryExecution().toRdd().toDebugString()
+    assert "PythonRDD" not in lineage, lineage
 
 
 def test_mixed_endpoint_types_decline_local_path(spark):
