@@ -602,7 +602,6 @@ def q_kg_dump_load_roundtrip(spark, sf_dir):
     from ..kernel.builder import dump_parser, load_parser
 
     bc = _parser_cache(spark, sf_dir, "alias")
-    # the dump is removed once it is reloaded
     with tempfile.TemporaryDirectory(prefix="kg_dump_") as tmp:
         folder = os.path.join(tmp, "parser")
         dump_parser(bc.value, folder)
