@@ -9,11 +9,9 @@ Scale design (SURVEY.md §4.3 Stage B):
 - project to (key, text) *before* the UDF boundary so Catalyst prunes the
   parquet/Iceberg scan (dropping ``html: binary`` is the single biggest I/O
   win at 100 TB);
-- optional repartition on the url (``num_partitions``): Common-Crawl shards
-  are size-skewed (giant pages, per-host clustering); hash-partitioning on
-  the url spreads them, keeps a url's rows in one task and leaves no
-  partition empty. ``run_pipeline`` leaves it off and repartitions on its
-  checkpoint bucket with no count, so AQE sizes the stage from its bytes;
+- the operator inherits its input's partitioning; the caller repartitions
+  (``run_pipeline`` hashes on its checkpoint bucket with no count, so AQE
+  sizes the stage from its bytes and a bucket stays in one task);
 - output frames are bounded by the session's Arrow batch cap, so a task
   that matches many pages never holds one giant frame;
 - sentence splitting + fixed token windows bound per-kernel-call state, so a
@@ -123,16 +121,13 @@ def extract_mentions(
     text_col: str = "text",
     max_alternatives: int = 0,
     window_tokens: int | None = 10,
-    num_partitions: int | None = None,
     columns: list[str] | None = None,
 ) -> DataFrame:
     """docs(key, text, ...) -> mentions DataFrame (MENTIONS_SCHEMA).
 
-    ``num_partitions`` hash-repartitions the pages on the url for skewed
-    corpora; leave None to inherit upstream partitioning (e.g. when the scan
-    already produced well-sized splits, or the caller has repartitioned).
-    Each task pays a fixed Python-worker start-up cost, so more partitions
-    than the work needs cost wall time (SCALING.md).
+    One Python task runs per input partition, and each pays a fixed
+    Python-worker start-up cost, so the caller should partition the pages
+    no finer than the work needs (SCALING.md).
 
     ``columns`` projects the OUTPUT inside the UDF: Catalyst cannot push
     column pruning through a mapInPandas boundary, so a narrow consumer (the
@@ -142,8 +137,6 @@ def extract_mentions(
     full-output + .select() is pinned in tests/test_extract_spark.py.
     """
     pruned = docs.select(F.col(key_col).alias("url"), F.col(text_col).alias("text"))
-    if num_partitions:
-        pruned = pruned.repartition(num_partitions, "url")
     all_fields = [f.name for f in MENTIONS_SCHEMA.fields]
     if columns is None:
         cols = all_fields
@@ -234,7 +227,6 @@ def extract_triple_partials(
     key_col: str = "url",
     text_col: str = "text",
     window_tokens: int | None = 10,
-    num_partitions: int | None = None,
     pred: str = "co_occurs_with",
 ) -> DataFrame:
     """Fused Stage B+C fast path: mentions -> within-window ordered pairs ->
@@ -259,8 +251,6 @@ def extract_triple_partials(
     the raw triple table (url/sent_idx provenance) must be materialized.
     """
     pruned = docs.select(F.col(key_col).alias("url"), F.col(text_col).alias("text"))
-    if num_partitions:
-        pruned = pruned.repartition(num_partitions, "url")
 
     def run_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         parser: Parser = parser_broadcast.value

@@ -30,7 +30,6 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import to_arrow_type
 
 
 def _canonical_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -261,11 +260,6 @@ def _integral_weight(weight_col: str, op_name: str):
     )
 
 
-_LOCAL_ENTITY_TYPES = (
-    T.StringType, T.LongType, T.IntegerType, T.ShortType, T.ByteType,
-)
-
-
 def _small_graph(edges: DataFrame, cap: int, compute, value_cols: list[str]):
     """The one small-graph dispatch of the iterative graph operators.
 
@@ -284,18 +278,17 @@ def _small_graph(edges: DataFrame, cap: int, compute, value_cols: list[str]):
     if (
         cap <= 0
         or ent_t != edges.schema[b].dataType
-        or not isinstance(ent_t, _LOCAL_ENTITY_TYPES)
+        or not isinstance(
+            ent_t, (T.StringType, T.LongType, T.IntegerType, T.ShortType, T.ByteType)
+        )
     ):
         return None
     probe = edges.limit(int(cap) + 1).collect()
     if len(probe) > cap or any(r[0] is None or r[1] is None for r in probe):
         return None
     cols = list(zip(*compute(probe))) or [()] * (1 + len(value_cols))
-    table = pa.table(
-        [pa.array(cols[0], to_arrow_type(ent_t))]
-        + [pa.array(c, pa.int64()) for c in cols[1:]],
-        names=["entity", *value_cols],
-    )
+    # createDataFrame casts the table to ``schema``'s Arrow types
+    table = pa.table(dict(zip(["entity", *value_cols], cols)))
     schema = T.StructType(
         [T.StructField("entity", ent_t)]
         + [T.StructField(c, T.LongType()) for c in value_cols]

@@ -9,8 +9,8 @@ signature, Arrow batch shape — is real and tested. Swapping in a real decoder
 changes one function, not the plan.
 
 Scale notes: payloads ride as Arrow binary buffers through mapInPandas;
-feature extraction is per-batch numpy; size-skewed payloads (videos) get the
-same salted-repartition treatment as giant web pages.
+feature extraction is per-batch numpy; the caller repartitions size-skewed
+payloads (videos) before the operator, as it does giant web pages.
 """
 
 from __future__ import annotations

@@ -101,11 +101,8 @@ def _mentions(
     pages = webpages_from_documents(_docs(spark, sf_dir))
     if where is not None:
         pages = pages.where(where)
-    # partitioning comes from _docs' spread; extract's own salted
-    # num_partitions stays the production knob for skewed corpora
-    return extract_mentions(
-        pages, bc, max_alternatives=0, window_tokens=WINDOW_TOKENS, num_partitions=None
-    )
+    # partitioning comes from _docs' spread
+    return extract_mentions(pages, bc, max_alternatives=0, window_tokens=WINDOW_TOKENS)
 
 
 # --------------------------------------------------------------------------

@@ -6,7 +6,6 @@ import pytest
 from gazetteer_entity_parser_spark.kernel import ParserBuilder, tokenize
 from gazetteer_entity_parser_spark.operators.extract import (
     extract_mentions,
-    extract_triple_partials,
     iter_windows,
     split_sentences,
 )
@@ -104,13 +103,12 @@ def lane_parsers(parser):
 
 def spark_mentions(spark, parser, docs, window_tokens, max_alternatives=5, columns=None):
     bc = spark.sparkContext.broadcast(parser)
-    df = spark.createDataFrame(docs, "url string, text string")
+    df = spark.createDataFrame(docs, "url string, text string").repartition(4, "url")
     out = extract_mentions(
         df,
         bc,
         max_alternatives=max_alternatives,
         window_tokens=window_tokens,
-        num_partitions=4,
         columns=columns,
     ).collect()
     rows = []
@@ -164,27 +162,6 @@ def test_small_arrow_cap_flushes_identical_rows(spark, parser):
         finally:
             spark.conf.set(key, default)
         assert got == want, k
-
-
-@pytest.mark.parametrize("operator", [extract_mentions, extract_triple_partials])
-def test_num_partitions_leaves_no_partition_empty(spark, parser, operator):
-    """``num_partitions`` hash-partitions on the url itself: 500 distinct
-    urls fill all 8 partitions, and a url's rows stay in one of them."""
-    from pyspark.sql import functions as F
-
-    bc = spark.sparkContext.broadcast(parser)
-    docs = spark.createDataFrame(
-        [(f"u{i}", "the fab four and the king of pop") for i in range(500)],
-        "url string, text string",
-    )
-    out = operator(docs, bc, num_partitions=8).withColumn(
-        "p", F.spark_partition_id()
-    )
-    parts = out.groupBy("p").count().collect()
-    assert len(parts) == 8, sorted(r["p"] for r in parts)
-    if "url" in out.columns:
-        per_url = out.groupBy("url").agg(F.countDistinct("p").alias("n"))
-        assert per_url.where("n > 1").count() == 0
 
 
 def test_mention_offsets_slice_original_text(spark, parser):

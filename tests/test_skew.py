@@ -49,7 +49,7 @@ def test_giant_page_extraction(spark):
         [("giant", giant)] + [(f"u{i}", "tok1 tok2 tok3") for i in range(50)],
         "url string, text string",
     )
-    out = extract_mentions(docs, bc, window_tokens=10, num_partitions=8)
+    out = extract_mentions(docs.repartition(8, "url"), bc, window_tokens=10)
     counts = {r["url"]: r["cnt"] for r in out.groupBy("url").agg(F.count("*").alias("cnt")).collect()}
     assert counts["giant"] == 2000 + 2000  # tok1 every 50 tokens; tok2-tok3 pairs
     assert counts["u0"] == 2
