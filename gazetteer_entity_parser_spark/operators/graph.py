@@ -260,14 +260,19 @@ def _integral_weight(weight_col: str, op_name: str):
     )
 
 
-def _small_graph(edges: DataFrame, cap: int, compute, value_cols: list[str]):
+def _small_graph(
+    edges: DataFrame, cap: int, compute, values: dict[str, bool], entity_nullable: bool
+):
     """The one small-graph dispatch of the iterative graph operators.
 
     ``edges``' first two columns are the endpoints. When both have the same
     string or integral type, a bounded probe (``limit(cap+1)``, one job)
     finds at most ``cap`` rows and no NULL endpoint, ``compute(rows)`` runs
     on the driver and its ``[(entity, *values)]`` result is returned as a
-    DataFrame ``(entity, *value_cols)`` with BIGINT values. The result goes
+    DataFrame ``(entity, *values)`` with BIGINT values. ``values`` maps each
+    value column to its nullability; with ``entity_nullable`` the caller
+    gives the nullability its distributed plan derives, so both paths
+    return one schema. The result goes
     back as an Arrow table, which the JVM scans directly; a Python list
     would be parallelized through a Python task per default partition.
     Returns None when the caller must take its distributed plan: the cap is
@@ -286,12 +291,12 @@ def _small_graph(edges: DataFrame, cap: int, compute, value_cols: list[str]):
     probe = edges.limit(int(cap) + 1).collect()
     if len(probe) > cap or any(r[0] is None or r[1] is None for r in probe):
         return None
-    cols = list(zip(*compute(probe))) or [()] * (1 + len(value_cols))
+    cols = list(zip(*compute(probe))) or [()] * (1 + len(values))
     # createDataFrame casts the table to ``schema``'s Arrow types
-    table = pa.table(dict(zip(["entity", *value_cols], cols)))
+    table = pa.table(dict(zip(["entity", *values], cols)))
     schema = T.StructType(
-        [T.StructField("entity", ent_t)]
-        + [T.StructField(c, T.LongType()) for c in value_cols]
+        [T.StructField("entity", ent_t, entity_nullable)]
+        + [T.StructField(c, T.LongType(), n) for c, n in values.items()]
     )
     return edges.sparkSession.createDataFrame(table, schema)
 
@@ -427,7 +432,10 @@ def pagerank(
         lambda rows: _local_pagerank(
             rows, n_iter, d_pct, scale, redistribute_dangling
         ),
-        ["r"],
+        # the distributed ranks: a union of both endpoints, and a NULL-able
+        # ``div`` only when the dangling share is added
+        {"r": redistribute_dangling},
+        e.schema["_src"].nullable or e.schema["_dst"].nullable,
     )
     if local is not None:
         return local.select(
@@ -572,7 +580,13 @@ def triangle_counts(
         F.col(src_col).alias("a"), F.col(dst_col).alias("b")
     ).where(F.col("a") != F.col("b"))
     local = _small_graph(
-        filtered, local_edge_cap, _local_triangle_counts, ["degree", "triangles"]
+        filtered,
+        local_edge_cap,
+        _local_triangle_counts,
+        {"degree": False, "triangles": False},
+        # the distributed vertices are least()/greatest() of the endpoints,
+        # which are NULL only when both are
+        filtered.schema["a"].nullable and filtered.schema["b"].nullable,
     )
     if local is not None:
         return _triangle_output(local)

@@ -7,14 +7,30 @@ Defaults chosen for the 100 TB design point, scaled down to local mode:
   moves through ``mapInPandas``; Arrow batch size capped so giant web pages
   don't blow the Python worker);
 - shuffle partitions sized to cores in local mode (on a real cluster this is
-  set to ~2-3x total cores by the submitter; AQE coalesces down).
+  set to ~2-3x total cores by the submitter; AQE coalesces down);
+- Python workers started through :mod:`.worker_daemon`, which imports an
+  installed pyspark of the same version instead of Spark's uncompiled
+  ``pyspark.zip`` (``extra_conf={"spark.python.daemon.module":
+  "pyspark.daemon"}`` restores Spark's own daemon).
 """
 
 from __future__ import annotations
 
 import os
+import site
 
 from pyspark.sql import SparkSession
+
+
+def _daemon_module() -> str:
+    """The worker daemon module: the package's launcher when a worker,
+    started in this directory with this ``PYTHONPATH``, can import it."""
+    paths = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep)]
+    paths += site.getsitepackages()
+    root = os.path.dirname(os.path.dirname(os.path.realpath(__file__)))
+    if os.path.isdir(root) and any(p and os.path.realpath(p) == root for p in paths):
+        return "gazetteer_entity_parser_spark.worker_daemon"
+    return "pyspark.daemon"
 
 
 def build_session(
@@ -41,6 +57,7 @@ def build_session(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.python.daemon.module", _daemon_module())
     )
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)

@@ -17,8 +17,8 @@ def _rows(df):
     )
 
 
-def _types(df):
-    return [(f.name, f.dataType) for f in df.schema.fields]
+def _schema(df):
+    return [(f.name, f.dataType, f.nullable) for f in df.schema.fields]
 
 
 GRAPHS = {
@@ -43,6 +43,26 @@ def test_local_path_identical_to_distributed(spark, graph, dangling):
     dist = pagerank(
         df, n_iter=7, redistribute_dangling=dangling, local_edge_cap=0
     )
+    assert _schema(local) == _schema(dist)
+    assert _rows(local) == _rows(dist)
+
+
+@pytest.mark.parametrize("nullable", [(False, False), (False, True), (True, True)])
+@pytest.mark.parametrize("dangling", [False, True])
+def test_local_path_nullability_matches_distributed(spark, nullable, dangling):
+    """Both paths declare the same nullability per column, whatever the
+    endpoints' nullability and the dangling mode."""
+    from pyspark.sql import types as T
+
+    schema = T.StructType([
+        T.StructField("subj", T.StringType(), nullable[0]),
+        T.StructField("obj", T.StringType(), nullable[1]),
+        T.StructField("weight", T.LongType(), False),
+    ])
+    df = spark.createDataFrame(GRAPHS["reference"], schema)
+    local = pagerank(df, n_iter=3, redistribute_dangling=dangling)
+    dist = pagerank(df, n_iter=3, redistribute_dangling=dangling, local_edge_cap=0)
+    assert _schema(local) == _schema(dist)
     assert _rows(local) == _rows(dist)
 
 
@@ -80,14 +100,14 @@ def test_narrow_integer_entities_take_local_path_identically(spark, ent_type):
         f"subj {ent_type}, obj {ent_type}, weight bigint",
     )
     local = pagerank(df, n_iter=5)
-    assert _types(local) == _types(pagerank(df, n_iter=5, local_edge_cap=0))
+    assert _schema(local) == _schema(pagerank(df, n_iter=5, local_edge_cap=0))
     assert _rows(local) == _rows(pagerank(df, n_iter=5, local_edge_cap=0))
 
 
 def test_empty_edge_set_identical(spark):
     df = spark.createDataFrame([], "subj string, obj string, weight bigint")
     local = pagerank(df, n_iter=3)
-    assert _types(local) == _types(pagerank(df, n_iter=3, local_edge_cap=0))
+    assert _schema(local) == _schema(pagerank(df, n_iter=3, local_edge_cap=0))
     assert _rows(local) == _rows(pagerank(df, n_iter=3, local_edge_cap=0)) == []
 
 

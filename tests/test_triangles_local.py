@@ -17,8 +17,8 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def _types(df):
-    return [(f.name, f.dataType) for f in df.schema.fields]
+def _schema(df):
+    return [(f.name, f.dataType, f.nullable) for f in df.schema.fields]
 
 
 GRAPHS = {
@@ -44,9 +44,26 @@ def test_local_path_identical_to_distributed(spark, graph):
     df = spark.createDataFrame(
         GRAPHS[graph], "subj string, obj string, weight bigint"
     )
-    assert _rows(triangle_counts(df)) == _rows(
-        triangle_counts(df, local_edge_cap=0)
-    )
+    local = triangle_counts(df)
+    assert _schema(local) == _schema(triangle_counts(df, local_edge_cap=0))
+    assert _rows(local) == _rows(triangle_counts(df, local_edge_cap=0))
+
+
+@pytest.mark.parametrize("nullable", [(False, False), (False, True), (True, True)])
+def test_local_path_nullability_matches_distributed(spark, nullable):
+    """Both paths declare the same nullability per column, whatever the
+    endpoints' nullability."""
+    from pyspark.sql import types as T
+
+    schema = T.StructType([
+        T.StructField("subj", T.StringType(), nullable[0]),
+        T.StructField("obj", T.StringType(), nullable[1]),
+        T.StructField("weight", T.LongType(), False),
+    ])
+    df = spark.createDataFrame(GRAPHS["shared_edge"], schema)
+    local = triangle_counts(df)
+    assert _schema(local) == _schema(triangle_counts(df, local_edge_cap=0))
+    assert _rows(local) == _rows(triangle_counts(df, local_edge_cap=0))
 
 
 def test_null_endpoints_drop_identically(spark):
@@ -86,14 +103,14 @@ def test_narrow_integer_entities_take_local_path_identically(spark, ent_type):
         f"subj {ent_type}, obj {ent_type}, weight bigint",
     )
     local = triangle_counts(df)
-    assert _types(local) == _types(triangle_counts(df, local_edge_cap=0))
+    assert _schema(local) == _schema(triangle_counts(df, local_edge_cap=0))
     assert _rows(local) == _rows(triangle_counts(df, local_edge_cap=0))
 
 
 def test_empty_edge_set_identical(spark):
     df = spark.createDataFrame([], "subj string, obj string, weight bigint")
     local = triangle_counts(df)
-    assert _types(local) == _types(triangle_counts(df, local_edge_cap=0))
+    assert _schema(local) == _schema(triangle_counts(df, local_edge_cap=0))
     assert _rows(local) == _rows(triangle_counts(df, local_edge_cap=0)) == []
 
 
