@@ -801,7 +801,7 @@ def hop_distances(
         .distinct()
         .persist()
     )
-    settled = (
+    settled = seed = (
         sources.select(F.col(source_col).alias("source"))
         .distinct()
         .select("source", F.col("source").alias("entity"), F.lit(0).alias("dist"))
@@ -821,6 +821,11 @@ def hop_distances(
             settled.select("source", "entity"), ["source", "entity"], "left_anti"
         ).localCheckpoint()
         settled = settled.unionByName(frontier).localCheckpoint()
+    # the result is a local checkpoint (or, with no round run, the seed
+    # itself), so neither sym nor a superseded seed is read again
+    sym.unpersist()
+    if settled is not seed:
+        seed.unpersist()
     return settled.select("source", "entity", F.col("dist").cast("int").alias("dist"))
 
 
@@ -1024,6 +1029,7 @@ def label_propagation(
             .select("entity", F.col("_m.label").alias("label"))
             .localCheckpoint()
         )
+    sym.unpersist()  # the labels are a local checkpoint: sym is not read again
     return labels.select("entity", F.col("label").alias("community"))
 
 

@@ -13,8 +13,13 @@ Stages (SURVEY.md §4.3):
      (kernel is deterministic => rewrite-same-bucket is idempotent).
   C. triples: windowed co-occurrence pairs by grouped pair expansion (one
      shuffle over the mention checkpoint).
-  D. canonicalize + MERGE INTO the triples store (Iceberg or parquet); the
-     first write into an absent parquet store is a single pass.
+  D. canonicalize + MERGE INTO the triples store: Iceberg for a dotted
+     table name when the runtime is present, else the bucketed parquet
+     store, whose merge is one write path — the updates plus, for an
+     existing store, its current version pruned to the touched buckets
+     (found by one collect over the persisted updates), rolled up per key.
+     The checkpoint and the store are read back with the schema in their
+     files' footers, so no schema-inference job runs.
 
 Lineage: one row per bucket per stage (output rows, checksum) — written next
 to each checkpoint. ``replay_buckets`` rewrites the checkpoint partitions of
@@ -32,11 +37,12 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import salted_bucket
 from ..operators.extract import extract_mentions
 from ..operators.triples import canonicalize_triples, cooccurrence_triples_grouped
 from ..sources.builder_job import broadcast_parser, build_parser_distributed
 from ..sources.gazetteer import vocabulary_gazetteer
-from ..sources.sinks import merge_into
+from ..sources.sinks import merge_into, read_bucketed
 from ..sources.webpages import webpages_from_documents
 
 
@@ -51,10 +57,6 @@ class PipelineConfig:
     # checkpoint/replay granularity; AQE sizes the match stage from its bytes
     n_buckets: int = 32
     use_alias_gazetteer: bool = False
-
-
-def _bucket(col: str, n: int):
-    return F.pmod(F.xxhash64(col), F.lit(n)).cast("int")
 
 
 def lineage_for(df: DataFrame, stage: str) -> DataFrame:
@@ -109,13 +111,13 @@ def run_pipeline(
     # ---- Stage B: match + checkpoint
     mentions_path = os.path.join(workdir, "mentions")
     mentions = extract_mentions(
-        docs.select("url", "text").repartition(_bucket("url", cfg.n_buckets)),
+        docs.select("url", "text").repartition(salted_bucket("url", cfg.n_buckets)),
         bc,
         max_alternatives=cfg.max_alternatives,
         window_tokens=cfg.window_tokens,
-    ).withColumn("bucket", _bucket("url", cfg.n_buckets))
+    ).withColumn("bucket", salted_bucket("url", cfg.n_buckets))
     mentions.write.mode("overwrite").partitionBy("bucket").parquet(mentions_path)
-    mentions_ck = spark.read.parquet(mentions_path)
+    mentions_ck = read_bucketed(spark, mentions_path)
     stage_seconds["B_extract_checkpoint"] = round(time.perf_counter() - t0, 3)
     t0 = time.perf_counter()
 
@@ -125,7 +127,7 @@ def run_pipeline(
     # mention checkpoint so extraction never re-executes)
     raw_triples = cooccurrence_triples_grouped(mentions_ck)
     triples_lineage = lineage_for(
-        raw_triples.withColumn("bucket", _bucket("url", cfg.n_buckets)), "triples"
+        raw_triples.withColumn("bucket", salted_bucket("url", cfg.n_buckets)), "triples"
     )
     lineage_for(mentions_ck, "mentions").unionByName(triples_lineage).write.mode(
         "overwrite"
@@ -136,7 +138,7 @@ def run_pipeline(
     # ---- Stage D: canonicalize + merge
     canonical = canonicalize_triples(raw_triples)
     target = triples_target or os.path.join(workdir, "triples")
-    sink_kind = merge_into(spark, target, canonical, prefer_iceberg=False)
+    sink_kind = merge_into(spark, target, canonical)
     stage_seconds["D_canonicalize_merge"] = round(time.perf_counter() - t0, 3)
 
     return {
@@ -147,7 +149,7 @@ def run_pipeline(
         "mentions": mentions_ck,
         "lineage_path": lineage_path,
         "triples_path": target,
-        "triples": spark.read.parquet(target) if sink_kind == "parquet" else None,
+        "triples": read_bucketed(spark, target) if sink_kind == "parquet" else None,
         "sink": sink_kind,
         # ops metrics: wall per stage (per-bucket row/checksum metrics are in
         # the lineage table)
@@ -178,13 +180,13 @@ def replay_buckets(
         )
     bc = broadcast_parser(spark, parser)
     try:
-        subset = docs.where(_bucket("url", cfg.n_buckets).isin(buckets))
+        subset = docs.where(salted_bucket("url", cfg.n_buckets).isin(buckets))
         mentions = extract_mentions(
             subset.select("url", "text"),
             bc,
             max_alternatives=cfg.max_alternatives,
             window_tokens=cfg.window_tokens,
-        ).withColumn("bucket", _bucket("url", cfg.n_buckets))
+        ).withColumn("bucket", salted_bucket("url", cfg.n_buckets))
         # dynamic overwrite for this write only: the session conf would make
         # every later overwrite in the session replace partitions, not paths
         mentions.write.mode("overwrite").option(

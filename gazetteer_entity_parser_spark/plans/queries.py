@@ -52,46 +52,54 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PARSER_CACHE: dict = {}
+_CACHE: dict = {}  # (applicationId, kind, sf_dir, ...) -> value, oldest first
+_CACHE_CAP = 8
+
+
+def _cached(spark: SparkSession, key: tuple, build):
+    """The one query-layer cache: a broadcast parser, the alias index frames
+    and the persisted canonical triples are built once per (application,
+    key). Keyed on ``applicationId`` (stable for the lifetime of a
+    SparkContext), not ``id(spark)`` — CPython id values are reused after
+    GC, which could alias a dead session's value into a new one in a
+    long-lived driver. At most ``_CACHE_CAP`` entries: another application's
+    entries are evicted first (their values are garbage), then the oldest,
+    and every evicted value is released (unpersisted)."""
+    key = (spark.sparkContext.applicationId, *key)
+    if key in _CACHE:
+        return _CACHE[key]
+    value = build()
+    while len(_CACHE) >= _CACHE_CAP:
+        victim = next((k for k in _CACHE if k[0] != key[0]), next(iter(_CACHE)))
+        _release(_CACHE.pop(victim))
+    _CACHE[key] = value
+    return value
+
+
+def _release(value) -> None:
+    for v in value.values() if isinstance(value, dict) else [value]:
+        try:
+            v.unpersist()
+        except Exception:
+            pass  # session may already be stopped
 
 
 def _parser_cache(spark: SparkSession, sf_dir: str, which: str):
-    """Build-once-per-(application, sf, flavor) broadcast parser.
+    """Build-once-per-(application, sf, flavor) broadcast parser."""
 
-    Keyed on ``applicationId`` (stable for the lifetime of a SparkContext),
-    not ``id(spark)`` — CPython id values are reused after GC, which could
-    alias a dead session's broadcast into a new one in a long-lived driver.
-    """
-    key = (spark.sparkContext.applicationId, sf_dir, which)
-    bc = _PARSER_CACHE.get(key)
-    if bc is not None:
-        return bc
-    docs = _docs(spark, sf_dir)
-    if which == "vocab":
-        gaz = vocabulary_gazetteer(docs, N_VOCAB)
-        parser = build_parser_distributed(gaz, threshold=1.0)
-    else:
-        gaz = alias_gazetteer(docs, N_VOCAB)
-        parser = build_parser_distributed(
-            gaz, threshold=0.6, n_stop_words=2, additional_stop_words=["hello"]
-        )
-    bc = spark.sparkContext.broadcast(parser)
-    if len(_PARSER_CACHE) >= 8:
-        # evict dead-session entries first (their broadcasts are garbage);
-        # if the cap is still exceeded within ONE long-lived application
-        # (e.g. a sweep over many sf dirs), fall back to oldest-first so the
-        # cache stays bounded either way
-        app = spark.sparkContext.applicationId
-        stale = [k for k in _PARSER_CACHE if k[0] != app]
-        same_app = [k for k in _PARSER_CACHE if k[0] == app]
-        overflow = same_app[: max(0, len(_PARSER_CACHE) - len(stale) - 7)]
-        for k in stale + overflow:
-            try:
-                _PARSER_CACHE.pop(k).unpersist()
-            except Exception:
-                pass  # session may already be stopped
-    _PARSER_CACHE[key] = bc
-    return bc
+    def build():
+        docs = _docs(spark, sf_dir)
+        if which == "vocab":
+            gaz = vocabulary_gazetteer(docs, N_VOCAB)
+            parser = build_parser_distributed(gaz, threshold=1.0)
+        else:
+            gaz = alias_gazetteer(docs, N_VOCAB)
+            parser = build_parser_distributed(
+                gaz, threshold=0.6, n_stop_words=2, additional_stop_words=["hello"]
+            )
+        return spark.sparkContext.broadcast(parser)
+
+    return _cached(spark, ("parser", sf_dir, which), build)
 
 
 def _mentions(
@@ -127,32 +135,18 @@ def q_kg_alias_gazetteer(spark, sf_dir):
     return alias_gazetteer(_docs(spark, sf_dir), N_VOCAB)
 
 
-_FRAMES_CACHE: dict = {}
-
-
 def _alias_frames(spark: SparkSession, sf_dir: str) -> dict:
     """Build-once-per-(application, sf) persisted index frames: three driver
     queries derive from the same build, and the window-heavy dimension build
     costs more than the queries themselves."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    fr = _FRAMES_CACHE.get(key)
-    if fr is None:
+
+    def build():
         fr = build_index_frames(alias_gazetteer(_docs(spark, sf_dir), N_VOCAB))
         for df in fr.values():
             df.persist()
-        if len(_FRAMES_CACHE) >= 8:
-            app = spark.sparkContext.applicationId
-            stale = [k for k in _FRAMES_CACHE if k[0] != app]
-            same_app = [k for k in _FRAMES_CACHE if k[0] == app]
-            overflow = same_app[: max(0, len(_FRAMES_CACHE) - len(stale) - 7)]
-            for k in stale + overflow:
-                for df in _FRAMES_CACHE.pop(k).values():
-                    try:
-                        df.unpersist()
-                    except Exception:
-                        pass  # session may already be stopped
-        _FRAMES_CACHE[key] = fr
-    return fr
+        return fr
+
+    return _cached(spark, ("frames", sf_dir), build)
 
 
 def q_kg_token_doc_frequency(spark, sf_dir):
@@ -287,9 +281,6 @@ def q_kg_entity_degree(spark, sf_dir):
     )
 
 
-_TRIPLES_CACHE: dict = {}
-
-
 def _canonical_triples_persisted(spark, sf_dir):
     """Shared input for the graph-analytics queries: canonical triples,
     persisted because every consumer scans the frame more than once
@@ -297,23 +288,18 @@ def _canonical_triples_persisted(spark, sf_dir):
     neighbors: both union roles) — without the boundary each scan re-runs
     the kernel extraction (the kg_entity_degree lesson, r4 verdict #1).
 
-    Cached per (applicationId, sf_dir), the `_parser_cache` pattern: a
-    driver session that runs all the graph queries back-to-back pays the
-    kernel extraction ONCE instead of once per query, and avoids stacking
-    a dozen persisted copies of the same frame. Dead-application entries
-    are evicted (their cached plans are garbage)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    trip = _TRIPLES_CACHE.get(key)
-    if trip is not None:
-        return trip
+    Cached per (applicationId, sf_dir) in :func:`_cached`: a driver session
+    that runs all the graph queries back-to-back pays the kernel extraction
+    ONCE instead of once per query, and avoids stacking a dozen persisted
+    copies of the same frame."""
     # r6: fused path (row-identical, pinned) — the graph family's input
     # builds in one mapInPandas pass + one rollup instead of materializing
     # the mention stream and its O(window^2) pair explosion
-    trip = _canonical_triples_fused(spark, sf_dir).persist()
-    for k in [k for k in _TRIPLES_CACHE if k[0] != key[0]]:
-        del _TRIPLES_CACHE[k]
-    _TRIPLES_CACHE[key] = trip
-    return trip
+    return _cached(
+        spark,
+        ("triples", sf_dir),
+        lambda: _canonical_triples_fused(spark, sf_dir).persist(),
+    )
 
 
 def q_kg_pagerank(spark, sf_dir):
@@ -582,7 +568,7 @@ def q_kg_prepend_rank_rebase(spark, sf_dir):
     ]
     # the cached vocab broadcast was unpersisted by the rebroadcast; evict it
     # so later queries rebuild instead of reusing an unpersisted handle
-    _PARSER_CACHE.pop((spark.sparkContext.applicationId, sf_dir, "vocab"), None)
+    _CACHE.pop((spark.sparkContext.applicationId, "parser", sf_dir, "vocab"), None)
     return spark.createDataFrame(
         rows, "raw_value string, resolved_value string, rank bigint"
     )

@@ -1,25 +1,34 @@
 """Sinks: Iceberg MERGE INTO with a parquet-upsert fallback.
 
 Production target (north_rule): ``MERGE INTO`` an Iceberg triples table.
-The sandbox has no Iceberg runtime jar, so :func:`merge_into` detects the
-catalog and otherwise performs the same upsert semantics against a parquet
-directory (full-outer combine + atomic directory swap). The SQL we'd run on
-a real cluster is generated either way so the semantics stay reviewable.
+The sandbox has no Iceberg runtime jar, so :func:`merge_into` routes a
+dotted table name to Iceberg only when the catalog is present and otherwise
+performs the same upsert semantics against a bucketed, symlink-versioned
+parquet store: one write path for an absent and an existing store (the
+updates, unioned with the touched buckets of the current version, rolled up
+per key), untouched buckets hard-linked, and an atomic symlink swap. The SQL
+we'd run on a real cluster is generated either way so the semantics stay
+reviewable.
 """
 
 from __future__ import annotations
 
+import glob
+import json
 import os
 import shutil
 import uuid
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructType
+
+from ..functions import salted_bucket
 
 
 def iceberg_available(spark: SparkSession) -> bool:
     try:
-        spark.sql("SELECT 1").collect()
         jvm_class = "org.apache.iceberg.spark.SparkCatalog"
         spark._jvm.java.lang.Class.forName(jvm_class)  # noqa: SLF001
         return True
@@ -70,6 +79,7 @@ def committed_tokens(target_path: str) -> set[str]:
 # mid-crash). On a real cluster Iceberg MERGE INTO supersedes all of this.
 
 _VERSION_RE = ".v-"
+N_BUCKETS = 32  # bucket count of a new store; an existing store keeps its marker's
 
 
 def _version_dirs(target_path: str, complete_only: bool = False) -> list[str]:
@@ -150,35 +160,55 @@ def _rollup(triples: DataFrame) -> DataFrame:
     )
 
 
+def read_bucketed(spark: SparkSession, path: str) -> DataFrame:
+    """Read back a ``bucket``-partitioned parquet dir this package wrote,
+    with the Spark schema recorded in one data file's footer: the same
+    schema a schemaless read infers (Spark infers it from that footer key),
+    without the Spark job the inference runs. A dir with no data file reads
+    schemaless, which raises as before."""
+    files = sorted(glob.glob(os.path.join(path, "bucket=*", "*.parquet")))
+    if not files:
+        return spark.read.parquet(path)
+    meta = pq.read_schema(files[0]).metadata[b"org.apache.spark.sql.parquet.row.metadata"]
+    schema = StructType.fromJson(json.loads(meta)).add("bucket", IntegerType())
+    return spark.read.schema(schema).parquet(path)
+
+
 def merge_into_parquet(
     spark: SparkSession,
     target_path: str,
     updates: DataFrame,
     commit_token: str | None = None,
-    n_buckets: int = 32,
 ) -> bool:
     """Same upsert semantics as :func:`merge_sql` against a parquet store.
 
     Scale shape: the store is partitioned by ``bucket = pmod(xxhash64(subj),
-    n_buckets)`` and a merge REWRITES ONLY TOUCHED PARTITIONS — the read side
+    N)`` and a merge REWRITES ONLY TOUCHED PARTITIONS — the read side
     partition-prunes to the touched buckets, the write produces just those
-    ``bucket=K`` dirs, and every untouched partition is hard-linked from the
-    previous version (zero copy, byte-identical — pinned in
-    tests/test_streaming.py). A micro-batch touching B of N buckets costs
-    O(B/N of the table), not O(table). ``n_buckets`` is fixed at store
-    creation (an ``_nbuckets_<N>`` marker wins over the parameter afterwards).
+    ``bucket=K`` dirs, and every bucket dir the write did not produce is
+    hard-linked from the previous version (zero copy, byte-identical —
+    pinned in tests/test_streaming.py). A micro-batch touching B of N
+    buckets costs O(B/N of the table), not O(table). N is
+    :data:`N_BUCKETS` when the store is created; afterwards the store's
+    ``_nbuckets_<N>`` marker decides.
 
     ``updates`` may repeat a ``(subj, pred, obj)`` key (the fused triples
     stage emits one partial per key and task): every write sums the weights
     and takes the min ranks per key, so the store holds one row per key
     whether or not it existed before.
 
-    Write layout: every write is hash-partitioned on ``bucket`` (AQE sizes
-    the task count from the bytes) and grouped per key within that
-    partitioning, so each touched bucket is written by one task into ONE
-    parquet file. A merge into an absent store is a single pass over the
-    updates; a merge into an existing store first persists the updates and
-    collects the touched buckets that prune its read.
+    One write path: the rows written are the updates, unioned — when the
+    store exists — with its current version pruned to the buckets the
+    updates touch (an absent store is an existing store with nothing to
+    read). The rows are hash-partitioned on ``bucket`` (AQE sizes the task
+    count from the bytes) and grouped per key within that partitioning, so
+    each touched bucket is written by one task into ONE parquet file. For an
+    existing store the updates are persisted and their touched buckets
+    collected: the collect prunes the read, and the persist keeps the
+    updates' lineage (often a whole extraction in foreachBatch) from running
+    twice. A ``left_semi`` (dynamic partition pruning) prune would read the
+    updates twice too, so it still needs the persist, and its broadcast is a
+    job of its own: it saves no job.
 
     Publishing is ONE atomic ``os.rename`` of a symlink onto the target
     (see the layout note above) — the target is never absent, a torn merge
@@ -196,62 +226,44 @@ def merge_into_parquet(
         return False
 
     current_version = os.path.realpath(target_path) if os.path.exists(target_path) else None
-    legacy_dir = current_version is not None and not os.path.islink(target_path)
-
-    if current_version is not None:
-        stored_n = _store_n_buckets(current_version)
-        if stored_n is not None:
-            n_buckets = stored_n  # marker wins: bucketing is fixed at creation
-    bucket = F.pmod(F.xxhash64("subj"), F.lit(n_buckets)).cast("int")
-    upd = updates.withColumn("bucket", bucket)
+    # bucketing is fixed at creation: an existing store's marker decides
+    n_buckets = _store_n_buckets(current_version) if current_version else N_BUCKETS
+    rows = upd = updates.withColumn("bucket", salted_bucket("subj", n_buckets))
     new_version = _next_version_path(target_path)
-
-    if current_version is None:
-        # absent store: one pass over the updates
-        _rollup(upd).write.mode("overwrite").partitionBy("bucket").parquet(new_version)
-        if not any(e.startswith("bucket=") for e in os.listdir(new_version)):
-            # empty batch onto a non-existent store: publishing would create a
-            # version dir with ZERO parquet files, which every later read fails
-            # to infer a schema from — the store would be permanently poisoned
-            # (and the commit token would mark the batch done). Nothing to merge
-            # and nothing worth recording: a replay of an empty batch is a no-op.
-            shutil.rmtree(new_version, ignore_errors=True)
-            return True
-    else:
-        # persist: the updates lineage (often a whole extraction pipeline in
-        # foreachBatch) is referenced by BOTH the touched-buckets collect (which
-        # prunes the read of the current version) and the merged write —
-        # without the boundary it would execute end-to-end twice
-        upd = upd.persist()
-        try:
+    try:
+        if current_version is not None:
+            upd = upd.persist()
             touched = sorted(
                 r["bucket"] for r in upd.select("bucket").distinct().collect()
             )  # bounded by n_buckets rows
-            current = spark.read.parquet(current_version)
-            if legacy_dir:  # pre-versioning store: one full rewrite migrates it
-                current = current.withColumn("bucket", bucket)
-            else:
-                # partition pruning: only the touched buckets' files are read
-                # (an empty batch touches nothing: every partition hard-links)
-                current = current.where(
-                    F.col("bucket").isin(touched) if touched else F.lit(False)
-                )
-            merged = _rollup(current.unionByName(upd))
-            merged.write.mode("overwrite").partitionBy("bucket").parquet(new_version)
-        finally:
-            upd.unpersist()
+            # partition pruning: only the touched buckets' files are read (an
+            # empty batch touches nothing: every partition hard-links)
+            rows = read_bucketed(spark, current_version).where(
+                F.col("bucket").isin(touched) if touched else F.lit(False)
+            ).unionByName(upd)
+        _rollup(rows).write.mode("overwrite").partitionBy("bucket").parquet(new_version)
+    finally:
+        upd.unpersist()
 
-    # hard-link untouched partitions from the current version (same inode ->
-    # byte-identical, no data copy)
-    if current_version is not None and not legacy_dir:
-        touched_dirs = {f"bucket={b}" for b in touched}
-        for entry in os.listdir(current_version):
-            if entry.startswith("bucket=") and entry not in touched_dirs:
-                src = os.path.join(current_version, entry)
-                dst = os.path.join(new_version, entry)
-                os.makedirs(dst, exist_ok=True)
-                for f in os.listdir(src):
-                    os.link(os.path.join(src, f), os.path.join(dst, f))
+    written = {e for e in os.listdir(new_version) if e.startswith("bucket=")}
+    if current_version is None and not written:
+        # empty batch onto a non-existent store: publishing would create a
+        # version dir with ZERO parquet files, which every later read fails
+        # to infer a schema from — the store would be permanently poisoned
+        # (and the commit token would mark the batch done). Nothing to merge
+        # and nothing worth recording: a replay of an empty batch is a no-op.
+        shutil.rmtree(new_version, ignore_errors=True)
+        return True
+
+    # hard-link every bucket the write did not produce from the current
+    # version (same inode -> byte-identical, no data copy)
+    for entry in os.listdir(current_version) if current_version else ():
+        if entry.startswith("bucket=") and entry not in written:
+            src = os.path.join(current_version, entry)
+            dst = os.path.join(new_version, entry)
+            os.makedirs(dst, exist_ok=True)
+            for f in os.listdir(src):
+                os.link(os.path.join(src, f), os.path.join(dst, f))
 
     # markers become durable atomically with the symlink swap below
     for tok in committed_tokens(target_path):
@@ -259,32 +271,19 @@ def merge_into_parquet(
     if commit_token is not None:
         open(os.path.join(new_version, f"_commit_{commit_token}"), "w").close()
     open(os.path.join(new_version, f"_nbuckets_{n_buckets}"), "w").close()
-
-    if legacy_dir:
-        # migrate: the legacy dir's rows are already folded into new_version;
-        # move it aside so the symlink can take its path (recovery covers a
-        # crash inside this one-time window)
-        os.rename(target_path, f"{target_path}.old-{uuid.uuid4().hex[:8]}")
     _swap_symlink(target_path, new_version)
 
-    # prune superseded versions and old-scheme leftovers — but RETAIN the
-    # generation the symlink pointed at before this swap: a concurrent
-    # reader that resolved the symlink just before the swap may still be
-    # scanning those files. One retained generation gives readers a full
-    # merge-cycle grace window (it is pruned by the NEXT merge); anything
-    # older is unreachable by any reader newer than two merges ago.
-    # Single-writer contract unchanged (concurrent MERGES still race).
-    keep = {os.path.abspath(new_version)}
-    if current_version is not None:
-        keep.add(os.path.abspath(current_version))
+    # prune superseded versions — but RETAIN the generation the symlink
+    # pointed at before this swap: a concurrent reader that resolved the
+    # symlink just before the swap may still be scanning those files. One
+    # retained generation gives readers a full merge-cycle grace window (it
+    # is pruned by the NEXT merge); anything older is unreachable by any
+    # reader newer than two merges ago. Single-writer contract unchanged
+    # (concurrent MERGES still race).
+    keep = {os.path.abspath(v) for v in (new_version, current_version) if v}
     for v in _version_dirs(target_path):
         if os.path.abspath(v) not in keep:
             shutil.rmtree(v, ignore_errors=True)
-    parent = os.path.dirname(os.path.abspath(target_path)) or "."
-    base = os.path.basename(target_path)
-    for d in os.listdir(parent):
-        if d.startswith(f"{base}.old-") or d.startswith(f"{base}.tmp-"):
-            shutil.rmtree(os.path.join(parent, d), ignore_errors=True)
     return True
 
 
@@ -306,9 +305,7 @@ def merge_into(
     spark: SparkSession,
     target: str,
     updates: DataFrame,
-    prefer_iceberg: bool = True,
     commit_token: str | None = None,
-    n_buckets: int = 32,
 ) -> str:
     """Dispatch: Iceberg table name when the runtime is present, else parquet
     path. Returns which path was taken ('iceberg' | 'parquet').
@@ -331,7 +328,7 @@ def merge_into(
     if force_table or force_path:
         target = target.split(":", 1)[1]
     route_iceberg = force_table or (not force_path and is_table_identifier(target))
-    if prefer_iceberg and route_iceberg and iceberg_available(spark):
+    if route_iceberg and iceberg_available(spark):
         if commit_token is not None:
             raise NotImplementedError(
                 "commit_token idempotence is implemented for the parquet store "
@@ -341,5 +338,5 @@ def merge_into(
             )
         merge_into_iceberg(spark, target, updates)
         return "iceberg"
-    merge_into_parquet(spark, target, updates, commit_token=commit_token, n_buckets=n_buckets)
+    merge_into_parquet(spark, target, updates, commit_token=commit_token)
     return "parquet"

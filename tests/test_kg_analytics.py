@@ -645,6 +645,43 @@ def test_label_propagation_validates_args(spark):
         label_propagation(df, n_iter=0)
 
 
+def _new_named_persistent_rdds(spark, before: set) -> list:
+    """Names of persistent RDDs created since ``before`` that carry a name:
+    a cached frame's RDD is named after its plan, a local checkpoint's is
+    not."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    return [rdds[i].name() for i in set(rdds) - before if rdds[i].name()]
+
+
+def test_graph_operators_release_their_cached_frames(spark):
+    """hop_distances (and harmonic_centrality through it) and
+    label_propagation return frames built from local checkpoints: the
+    frames they cache along the way are released before they return."""
+    from gazetteer_entity_parser_spark.operators.graph import (
+        harmonic_centrality,
+        hop_distances,
+        label_propagation,
+    )
+
+    df = spark.createDataFrame(
+        [("a", "b", 2), ("b", "c", 1), ("c", "d", 3), ("x", "y", 1)],
+        "subj string, obj string, weight bigint",
+    )
+    sdf = spark.createDataFrame([("a",), ("x",)], "entity string")
+    jsc = spark.sparkContext._jsc
+    for run in (
+        lambda: hop_distances(df, sdf, max_hops=3),
+        lambda: harmonic_centrality(df, sdf, max_hops=3),
+        lambda: label_propagation(df, n_iter=2),
+    ):
+        before = set(jsc.getPersistentRDDs())
+        assert run().collect()
+        assert _new_named_persistent_rdds(spark, before) == []
+    # max_hops=0 returns the (cached) seed itself: it stays readable
+    got = sorted(tuple(r) for r in hop_distances(df, sdf, max_hops=0).collect())
+    assert got == [("a", "a", 0), ("x", "x", 0)]
+
+
 def test_canonical_triples_cached_per_application(spark):
     """The graph-family input is built once per (app, sf_dir): repeated
     calls return the SAME persisted frame (no re-extraction, no cache

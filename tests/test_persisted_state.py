@@ -57,3 +57,34 @@ def test_streaming_drains_leave_no_persisted_frames(spark, tmp_path):
         assert q.exception() is None
     assert spark.read.parquet(store).count()
     assert set(jsc.getPersistentRDDs()) - before == set()
+
+
+def test_query_cache_is_capped_and_releases_evictions(spark, tmp_path):
+    """One application sweeping many corpora keeps at most the cache cap of
+    entries, and an evicted triples frame is unpersisted."""
+    from gazetteer_entity_parser_spark.plans import queries
+
+    jsc = spark.sparkContext._jsc
+    app = spark.sparkContext.applicationId
+    dirs, rdd_ids = [], []
+    try:
+        for i in range(9):
+            sf_dir = tmp_path / f"sf{i}"
+            sf_dir.mkdir()
+            shutil.copy(f"{SF}/documents.parquet", sf_dir / "documents.parquet")
+            dirs.append(str(sf_dir))
+            before = set(jsc.getPersistentRDDs())
+            assert queries._canonical_triples_persisted(spark, str(sf_dir)).count()
+            rdd_ids.append(set(jsc.getPersistentRDDs()) - before)
+            assert len(queries._CACHE) <= queries._CACHE_CAP
+        assert all(rdd_ids)
+        evicted = [
+            ids for d, ids in zip(dirs, rdd_ids)
+            if (app, "triples", d) not in queries._CACHE
+        ]
+        assert evicted  # nine corpora need more entries than the cap
+        live = set(jsc.getPersistentRDDs())
+        assert all(not (ids & live) for ids in evicted)
+    finally:
+        for key in [k for k in queries._CACHE if k[2] in dirs]:
+            queries._release(queries._CACHE.pop(key))

@@ -185,3 +185,19 @@ def test_replay_leaves_session_conf_unchanged(spark, result):
     assert spark.conf.get(key) == conf_before == "STATIC"
     # the replay overwrote bucket 1 only
     assert _mention_rows(spark, res["mentions_path"]) == before
+
+
+def test_dotted_triples_target_routes_to_iceberg(spark, sf_smoke, tmp_path, monkeypatch):
+    """run_pipeline routes by merge_into's string rule: a dotted table name
+    goes to the Iceberg MERGE where the runtime is present."""
+    from gazetteer_entity_parser_spark.sources import sinks
+
+    merged = []
+    monkeypatch.setattr(sinks, "iceberg_available", lambda _s: True)
+    monkeypatch.setattr(
+        sinks, "merge_into_iceberg", lambda _s, table, _u: merged.append(table)
+    )
+    docs = docs_from_sf_dir(spark, sf_smoke).limit(20)
+    out = run_pipeline(spark, docs, str(tmp_path / "work"), CFG, "db.triples")
+    assert out["sink"] == "iceberg" and out["triples"] is None
+    assert merged == ["db.triples"]

@@ -149,6 +149,15 @@ def _bucket_files(store: str) -> dict:
     return out
 
 
+def _buckets(df, n_buckets=None) -> list:
+    """The sorted store buckets that ``df``'s subjects hash into."""
+    from gazetteer_entity_parser_spark.functions import salted_bucket
+    from gazetteer_entity_parser_spark.sources.sinks import N_BUCKETS
+
+    b = salted_bucket("subj", n_buckets or N_BUCKETS)
+    return sorted(r[0] for r in df.select(b).distinct().collect())
+
+
 def test_merge_rewrites_only_touched_partitions(spark, tmp_path):
     """Scale contract (r2 verdict #3): a merge must rewrite only the
     partitions its updates hash into; every untouched bucket's files stay
@@ -163,23 +172,20 @@ def test_merge_rewrites_only_touched_partitions(spark, tmp_path):
         "subj string, pred string, obj string, weight bigint, "
         "subj_rank bigint, obj_rank bigint",
     )
-    assert merge_into_parquet(spark, target, seed, commit_token="0", n_buckets=8)
+    assert merge_into_parquet(spark, target, seed, commit_token="0")
     before = _bucket_files(target)
-    assert len(before) > 2  # 64 subjects spread over several of 8 buckets
+    assert len(before) > 2  # 64 subjects spread over several buckets
 
     one = spark.createDataFrame(
         [("E0", "co_occurs_with", "F0", 5, 0, 1)],
         "subj string, pred string, obj string, weight bigint, "
         "subj_rank bigint, obj_rank bigint",
     )
-    assert merge_into_parquet(spark, target, one, commit_token="1", n_buckets=8)
+    assert merge_into_parquet(spark, target, one, commit_token="1")
     after = _bucket_files(target)
     assert set(after) == set(before)
 
-    from pyspark.sql import functions as F2
-    touched_bucket = "bucket=%d" % (
-        one.select(F2.pmod(F2.xxhash64("subj"), F2.lit(8)).cast("int")).collect()[0][0]
-    )
+    touched_bucket = "bucket=%d" % _buckets(one)[0]
     changed = [b for b in before if before[b] != after[b]]
     assert changed == [touched_bucket]
     for b in before:
@@ -217,12 +223,12 @@ def test_merge_writes_one_file_per_touched_bucket(spark, tmp_path):
     for tok, (lo, hi) in enumerate([(0, 200), (100, 300)]):
         df = batch(lo, hi)
         assert df.rdd.getNumPartitions() == 8
-        assert merge_into_parquet(spark, target, df, commit_token=str(tok), n_buckets=16)
+        assert merge_into_parquet(spark, target, df, commit_token=str(tok))
         files = {
             b: [f for f in names if f.endswith(".parquet")]
             for b, names in _bucket_files(target).items()
         }
-        assert len(files) == 16  # 200+ subjects reach every bucket
+        assert sorted(files) == sorted(f"bucket={b}" for b in _buckets(batch(0, hi)))
         assert all(len(f) == 1 for f in files.values()), files
     assert spark.read.parquet(target).count() == 300
 
@@ -277,35 +283,63 @@ def test_merge_crash_recovery_repoints_newest_version(spark, tmp_path):
     assert spark.read.parquet(target).collect()[0]["weight"] == 6
 
 
-def test_merge_migrates_legacy_unpartitioned_store(spark, tmp_path):
-    """A pre-versioning store (plain parquet dir) is folded into the
-    partitioned layout on its first merge; weights stay additive."""
+def test_store_keeps_its_bucket_count(spark, tmp_path, monkeypatch):
+    """The bucket count is fixed when the store is created: a later merge
+    uses the store's ``_nbuckets_`` marker, not the module constant."""
     import os
 
-    from gazetteer_entity_parser_spark.sources.sinks import merge_into_parquet
+    from gazetteer_entity_parser_spark.sources import sinks
 
     target = str(tmp_path / "store")
-    legacy = spark.createDataFrame(
-        [("A", "p", "B", 3, 0, 1), ("C", "p", "D", 2, 0, 1)],
+    schema = (
         "subj string, pred string, obj string, weight bigint, "
-        "subj_rank bigint, obj_rank bigint",
+        "subj_rank bigint, obj_rank bigint"
     )
-    legacy.write.parquet(target)  # old layout: real dir, no buckets
-    assert not os.path.islink(target)
+    seed = spark.createDataFrame(
+        [(f"E{i}", "p", "F", 1, 0, 1) for i in range(64)], schema
+    )
+    monkeypatch.setattr(sinks, "N_BUCKETS", 8)
+    assert sinks.merge_into_parquet(spark, target, seed, commit_token="0")
+    monkeypatch.setattr(sinks, "N_BUCKETS", 32)
+    batch = spark.createDataFrame([("E40", "p", "F", 2, 0, 1)], schema)
+    assert sinks.merge_into_parquet(spark, target, batch, commit_token="1")
 
-    batch = spark.createDataFrame(
-        [("A", "p", "B", 1, 0, 1)],
-        "subj string, pred string, obj string, weight bigint, "
-        "subj_rank bigint, obj_rank bigint",
+    assert "_nbuckets_8" in os.listdir(os.path.realpath(target))
+    assert sorted(_bucket_files(target)) == sorted(
+        f"bucket={b}" for b in _buckets(seed, 8)
     )
-    assert merge_into_parquet(spark, target, batch, commit_token="m0")
-    assert os.path.islink(target)
     rows = {r["subj"]: r["weight"] for r in spark.read.parquet(target).collect()}
-    assert rows == {"A": 4, "C": 2}
-    # a later n_buckets override is ignored in favor of the store marker
-    assert merge_into_parquet(spark, target, batch, commit_token="m1", n_buckets=4)
-    rows = {r["subj"]: r["weight"] for r in spark.read.parquet(target).collect()}
-    assert rows == {"A": 5, "C": 2}
+    assert rows["E40"] == 3 and len(rows) == 64
+
+
+@pytest.mark.parametrize("store_type,update_type", [("bigint", "int"), ("int", "bigint")])
+def test_merge_across_rank_widths(spark, tmp_path, store_type, update_type):
+    """The tests write bigint ranks and the stream writes int ranks: a merge
+    reads the current version with the types its files hold, and the union
+    with the updates widens to bigint."""
+    from gazetteer_entity_parser_spark.sources.sinks import merge_into_parquet
+
+    schema = (
+        "subj string, pred string, obj string, weight bigint, "
+        "subj_rank {t}, obj_rank {t}"
+    )
+    target = str(tmp_path / "store")
+    first = spark.createDataFrame(
+        [("A", "p", "B", 3, 4, 5)], schema.format(t=store_type)
+    )
+    assert merge_into_parquet(spark, target, first, commit_token="0")
+    assert dict(spark.read.parquet(target).dtypes)["subj_rank"] == store_type
+    # the same key: every bucket of the store is rewritten with the new width
+    second = spark.createDataFrame(
+        [("A", "p", "B", 2, 1, 7)], schema.format(t=update_type)
+    )
+    assert merge_into_parquet(spark, target, second, commit_token="1")
+    got = spark.read.parquet(target)
+    assert dict(got.dtypes)["subj_rank"] == "bigint"
+    assert [tuple(r) for r in got.select(
+        "subj", "pred", "obj", "weight", "subj_rank", "obj_rank").collect()] == [
+        ("A", "p", "B", 5, 1, 5)
+    ]
 
 
 def test_recovery_never_promotes_torn_version(spark, tmp_path):
@@ -483,7 +517,7 @@ def test_merge_retains_one_superseded_generation(spark, tmp_path):
 
     def batch(tok, w):
         df = spark.createDataFrame([("E0", "p", "F0", w, 0, 1)], schema)
-        assert merge_into_parquet(spark, target, df, commit_token=tok, n_buckets=4)
+        assert merge_into_parquet(spark, target, df, commit_token=tok)
 
     batch("0", 1)
     v1 = os.path.realpath(target)
